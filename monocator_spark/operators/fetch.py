@@ -30,18 +30,6 @@ from monocator_spark.functions.imaging import decode, phash64, pixels_for, psnr_
 from monocator_spark.sim.simulator import INVALID, MISSING, OK, OVERSIZE
 
 
-def _noop_status_col(cfg: spec.CrawlConfig) -> F.Column:
-    """cfg.noop_validate's pure-Catalyst status: the subset of the validator
-    decidable without decoding (null/oversize), OK otherwise. Identical to
-    the real validator on all-well-formed worlds (see spec.CrawlConfig)."""
-    return (
-        F.when(F.col("bytes").isNull(), F.lit(MISSING))
-        .when(F.length("bytes") > cfg.max_body_bytes, F.lit(OVERSIZE))
-        .otherwise(F.lit(OK))
-        .cast("int")
-    )
-
-
 def make_validate_udf(cfg: spec.CrawlConfig):
     max_body, psnr_min = cfg.max_body_bytes, cfg.psnr_min_db
 
@@ -130,14 +118,11 @@ def fetch_wave(
         F.lit(None).cast("long").alias("phash"),
         *[c for c in keyed.columns if c != "image_id"],
     )
-    if cfg.noop_validate:
-        validated_hit = hit.withColumn("status", _noop_status_col(cfg))
-    else:
-        validate_udf = make_validate_udf(cfg)
-        validated_hit = hit.withColumn(
-            "status",
-            validate_udf("image_id", "bytes", "w", "h", "caption", "phash"),
-        )
+    validate_udf = make_validate_udf(cfg)
+    validated_hit = hit.withColumn(
+        "status",
+        validate_udf("image_id", "bytes", "w", "h", "caption", "phash"),
+    )
     return validated_hit.unionByName(
         miss.withColumn("status", F.lit(MISSING).cast("int"))
     )
@@ -157,8 +142,6 @@ def fetch_wave_bucketed(
     """
     keyed = wave.withColumn("image_id", F.substring_index("url_norm", "/", -1))
     joined = keyed.join(corpus_tbl, "image_id", "left")
-    if cfg.noop_validate:
-        return joined.withColumn("status", _noop_status_col(cfg))
     validate_udf = make_validate_udf(cfg)
     return joined.withColumn(
         "status",

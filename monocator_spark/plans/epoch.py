@@ -84,34 +84,6 @@ class CrawlEngine:
         # host_state is O(hosts) — tiny next to the frontier; cached (joined
         # only against enqueue batches, never the whole frontier)
         self.host_state = spark.read.parquet(f"{world_dir}/host_state").cache()
-        self.payload_write_mode = self._resolve_payload_write()
-
-    def _resolve_payload_write(self) -> str:
-        """Resolve cfg.payload_write ("auto" → "cache"/"rejoin") once.
-
-        The auto estimate reads parquet FOOTERS only (no data scan): the
-        corpus's on-disk bytes/row — payload-dominated by construction —
-        times the wave size approximates one wave's cached payload
-        footprint. Driver-side, a handful of file stats, run once per
-        engine lifetime."""
-        mode = self.cfg.payload_write
-        if mode != "auto":
-            return mode
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
-        d = f"{self.world_dir}/corpus_bucketed" if self.corpus_bucketed else (
-            f"{self.world_dir}/corpus"
-        )
-        files = sorted(glob.glob(f"{d}/*.parquet"))[:8]
-        rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        if not rows:
-            return "cache"
-        size = sum(os.path.getsize(f) for f in files)
-        est = self.cfg.wave_size * (size / rows)
-        return "cache" if est <= self.cfg.payload_cache_max_bytes else "rejoin"
 
     # -- bootstrap -------------------------------------------------------------
     def bootstrap(self):
@@ -134,18 +106,6 @@ class CrawlEngine:
         state; a kill before the tail commits leaves no manifest → clean
         re-bootstrap on resume.
         """
-        import os
-
-        _debug = bool(os.environ.get("MONO_EPOCH_TIMING"))
-        _t0 = time.monotonic()
-
-        def _bmark(label: str) -> None:
-            if _debug:
-                print(
-                    f"[timing] boot.{label} @ {time.monotonic() - _t0:.2f}s",
-                    flush=True,
-                )
-
         seeds = self.spark.read.parquet(f"{self.world_dir}/seeds").withColumn(
             "depth", F.lit(0)
         )
@@ -153,38 +113,12 @@ class CrawlEngine:
         # materialize the cache once so the concurrent writes below all
         # read it instead of racing to build it multiple times
         cands.count()
-        _bmark("cands_materialized")
         admitted, denied = politeness.gate(cands, self.host_state, self.cfg)
         seen = cands.select("url_hash", "url_norm")
         bloom = dedup.merge_filter(
             None, dedup.build_filter(cands.select("url_hash"), self.cfg), self.cfg
         ).cache()  # small (n_shards rows); read by epoch 0 AND the tail write
         frontier0 = admitted.select(*FRONTIER_COLS_Q)
-
-        if os.environ.get("MONO_BOOT_HANDOFF", "1") == "0":
-            # A/B escape hatch: stage the state synchronously (the
-            # pre-handoff behavior) instead of handing epoch 0 the
-            # in-memory plans
-            writes = [
-                lambda: self.store.stage_overwrite("frontier", frontier0, 0),
-                lambda: self.store.stage_append("seen", seen, 0),
-                lambda: self.store.stage_overwrite("bloom", bloom, 0),
-            ]
-            with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-                for fut in [pool.submit(w) for w in writes]:
-                    fut.result()
-            bloom.unpersist()
-            _bmark("state_staged_sync")
-
-            def tail_sync() -> dict:
-                self.store.stage_append(
-                    "denied", denied.withColumn("epoch", F.lit(0)), 0
-                )
-                self.store.commit(0, {"crawl_epoch": -1})
-                cands.unpersist()
-                return {"idle": True}
-
-            return tail_sync
 
         # epoch 0 reads this state straight from the in-memory plans over
         # the cands cache — no parquet round trip on the critical path. The
@@ -194,7 +128,6 @@ class CrawlEngine:
         # commits leaves no manifest → clean re-bootstrap on resume.
         self._boot_state = {"frontier": frontier0, "seen": seen, "bloom": bloom}
         self._boot_persist = [cands, bloom]
-        _bmark("state_ready_in_memory")
 
         def tail() -> dict:
             writes = [
@@ -209,7 +142,6 @@ class CrawlEngine:
                 for fut in [pool.submit(w) for w in writes]:
                     fut.result()
             self.store.commit(0, {"crawl_epoch": -1})
-            _bmark("tail_committed")
             return {"idle": True}  # bookkeeping only — not a crawl epoch
 
         return tail
@@ -217,14 +149,14 @@ class CrawlEngine:
     # -- one epoch, two pipelined phases ----------------------------------------
     #
     # _phase1 = the epoch's heavy COMPUTE: wave selection, fetch+validate
-    #   (payload bytes flow corpus-scan → validate UDF → dropped; only the
-    #   NARROW validate output is cached), outlink dedup+gate,
-    #   next-frontier — everything materialized into caches by one action,
-    #   zero table writes.
+    #   (payload bytes flow corpus-scan → validate UDF → the cached
+    #   validate output ``meta``, bytes included), outlink dedup+gate,
+    #   next-frontier — everything materialized into caches, zero table
+    #   writes.
     # _phase2 = the epoch's FLUSH: all table writes from those caches
     #   (concurrent jobs) — including the bytes-bearing ``fetched`` table,
-    #   rebuilt by a corpus re-join (_payload_rows) so the byte stream
-    #   never sits in a cache tier — then the atomic manifest commit.
+    #   written straight from ``meta`` (no corpus re-scan) — then the
+    #   atomic manifest commit.
     #
     # run() overlaps _phase2(k) with _phase1(k+1): _phase2 stages the
     # STATE tables (frontier / seen / bloom, scan caches) first and
@@ -238,17 +170,14 @@ class CrawlEngine:
     # commits.
 
     def _phase1(self, epoch: int, state_ready) -> dict | None:
-        import os
-
+        # per-phase wall seconds, returned in RunStats.per_epoch[i]["timing"]
         timing: dict[str, float] = {}
-        _debug = bool(os.environ.get("MONO_EPOCH_TIMING"))
         _last = [time.monotonic()]
 
         def _mark(label: str) -> None:
-            if _debug:
-                now = time.monotonic()
-                timing[label] = round(now - _last[0], 2)
-                _last[0] = now
+            now = time.monotonic()
+            timing[label] = round(now - _last[0], 2)
+            _last[0] = now
 
         cfg = self.cfg
         persisted: list = []  # this epoch's caches; released by its _phase2
@@ -372,18 +301,13 @@ class CrawlEngine:
         # THE epoch's one critical-path byte pass: corpus scan → validate
         # UDF. Every phase-1 consumer (retry, perm-failed, outlinks, change
         # detection, metrics) reads the cached validate output (`meta`).
-        # What `meta` carries depends on the resolved payload-write mode:
-        #   cache  — bytes ride along in the cache; the flusher writes
-        #            `fetched` straight from it (no corpus re-scan).
-        #   rejoin — bytes are DROPPED here (narrow cache, no wave-sized
-        #            payload tier); the flusher re-attaches them via a
-        #            corpus re-join (see _payload_rows — no UDF re-run: an
-        #            OK row's stored bytes ARE its corpus bytes verbatim).
-        # Both keep the disk write off the critical path, overlapped with
-        # epoch k+1's compute.
-        payload_cols = ["bytes"] if self.payload_write_mode == "cache" else []
+        # The payload bytes ride along in that cache, so the flusher writes
+        # `fetched` straight from it — no corpus re-scan, and the disk write
+        # stays off the critical path, overlapped with epoch k+1's compute.
+        # persist()'s default level (MEMORY_AND_DISK_DESER) spills a wave
+        # whose payload outgrows storage memory instead of failing.
         meta = fetched.select(
-            *FRONTIER_COLS_Q, "wave_pos", "image_id", *payload_cols,
+            *FRONTIER_COLS_Q, "wave_pos", "image_id", "bytes",
             "w", "h", "fmt", "caption", "phash",
             F.lit(epoch).alias("fetch_epoch"), "status",
         ).observe(
@@ -539,57 +463,22 @@ class CrawlEngine:
             "smtp_rows": smtp_rows, "new_smtp_rows": new_smtp_rows,
             "host_next": host_next_new,
             "status_obs": status_obs, "frontier_obs": frontier_obs,
-            "persisted": persisted, "debug": _debug,
+            "persisted": persisted,
         }
-
-    def _payload_rows(self, meta: DataFrame) -> DataFrame:
-        """The bytes-bearing ``fetched`` rows for one epoch.
-
-        cache mode (meta carries bytes): write straight from the cache; the
-        only work is nulling non-OK payloads (nobody consumes a failed
-        body, and the rejoin mode can't produce one — identical output).
-
-        rejoin mode (meta is narrow): OK rows re-join the corpus for their
-        payload (an OK row's stored bytes ARE its corpus bytes — the
-        validator only derives status, never rewrites the body). The
-        wave-bounded narrow side broadcasts below cfg.wave_broadcast_max
-        (shuffle join above — and against the bucketed corpus layout only
-        the narrow side ever shuffles); the corpus scan is pruned to
-        (image_id, bytes) but is still one extra corpus pass per epoch —
-        the price of never holding a wave's payload as a cache tier."""
-        out_cols = [
-            *FRONTIER_COLS_Q, "wave_pos", "image_id", "bytes",
-            "w", "h", "fmt", "caption", "phash", "fetch_epoch", "status",
-        ]
-        if "bytes" in meta.columns:
-            return meta.withColumn(
-                "bytes",
-                F.when(F.col("status") == OK, F.col("bytes")).cast("binary"),
-            ).select(*out_cols)
-        from monocator_spark.operators.hints import wave_side
-
-        okm = meta.where(F.col("status") == OK)
-        with_b = self.corpus.select("image_id", "bytes").join(
-            wave_side(okm, self.cfg), "image_id", "inner"
-        )
-        rest = meta.where(F.col("status") != OK).withColumn(
-            "bytes", F.lit(None).cast("binary")
-        )
-        return with_b.unionByName(rest).select(*out_cols)
 
     def _phase2(self, ctx: dict, state_ready=None) -> dict:
         """Flush epoch k's tables from its caches, commit, release caches.
 
         The STATE tables (frontier, seen, bloom, the scan caches) are
         staged first and ``state_ready`` is signalled so epoch k+1's
-        compute can start; the heavy payload flush (the corpus re-join
-        writing ``fetched``, see _payload_rows), the narrow flushes and the
-        commit overlap it. Under change detection the lag-based
-        prior_phash lookup consumes per-epoch history as STATE — that
-        history is the NARROW ``phash_hist`` table (a projection of the
-        cached validate output), staged before ``state_ready`` fires; the
-        bytes-bearing ``fetched`` write itself is pure output and always
-        overlaps the next epoch's compute."""
+        compute can start; the heavy payload flush (``fetched``, written
+        from the cached validate output with non-OK bodies nulled), the
+        narrow flushes and the commit overlap it. Under change detection
+        the lag-based prior_phash lookup consumes per-epoch history as
+        STATE — that history is the NARROW ``phash_hist`` table (a
+        projection of the cached validate output), staged before
+        ``state_ready`` fires; the bytes-bearing ``fetched`` write itself
+        is pure output and always overlaps the next epoch's compute."""
         cfg = self.cfg
         st = self.store
         epoch = ctx["epoch"]
@@ -599,14 +488,10 @@ class CrawlEngine:
         lineage = ctx["lineage"]
         t_flush = time.monotonic()
 
-        def flush_fetched() -> None:
-            st.stage_append("fetched", self._payload_rows(ctx["meta"]), epoch + 1)
-
         if cfg.change_detection:
             # phash_hist is STATE: epoch k+1's prior_phash lag reads it.
             # Narrow columns off the cached validate output — staging it
-            # here costs one small job, vs. the corpus re-join payload
-            # write the old design put on the critical path.
+            # here costs one small job; the payload write stays overlapped.
             st.stage_append(
                 "phash_hist",
                 ctx["meta"]
@@ -633,8 +518,7 @@ class CrawlEngine:
 
         if state_ready is not None:
             state_ready.set()  # next epoch may now preview the staged state
-        if ctx["debug"]:
-            ctx["timing"]["state_flush"] = round(time.monotonic() - t_flush, 2)
+        ctx["timing"]["state_flush"] = round(time.monotonic() - t_flush, 2)
 
         flushes: list = [
             lambda: st.stage_append(
@@ -655,7 +539,15 @@ class CrawlEngine:
                 epoch + 1,
             ),
             lambda: st.stage_append("failed", perm_failed, epoch + 1),
-            flush_fetched,
+            # the payload straight from the cached validate output; non-OK
+            # bodies are nulled (nobody consumes a failed body)
+            lambda: st.stage_append(
+                "fetched",
+                ctx["meta"].withColumn(
+                    "bytes", F.when(F.col("status") == OK, F.col("bytes"))
+                ),
+                epoch + 1,
+            ),
         ]
         if cfg.tls_scan:
             flushes.append(
@@ -718,9 +610,9 @@ class CrawlEngine:
         # consumed manifest numbers; crawl_epoch in meta is what resume reads
         last = st.last_epoch()
         st.commit((-1 if last is None else last) + 1, {"crawl_epoch": epoch})
-        if ctx["debug"]:
-            ctx["timing"]["flush_commit"] = round(time.monotonic() - t_flush, 2)
-            m["timing"] = ctx["timing"]
+        # after the metrics write: the table's schema carries no timing
+        ctx["timing"]["flush_commit"] = round(time.monotonic() - t_flush, 2)
+        m["timing"] = ctx["timing"]
         for df in ctx["persisted"]:
             df.unpersist()
         return m
@@ -811,26 +703,15 @@ class CrawlEngine:
         background thread) overlaps epoch k+1's compute. Commits still land
         strictly in epoch order, so a kill at any moment resumes exactly.
         """
-        import os
         import threading
 
         t0 = time.monotonic()
-        _debug = bool(os.environ.get("MONO_EPOCH_TIMING"))
-
-        def _land(label: str) -> None:
-            if _debug:
-                print(
-                    f"[timing] {label} @ {time.monotonic() - t0:.2f}s",
-                    flush=True,
-                )
-
         boot_tail = None
         if self.store.last_epoch() is None:
-            # stages the epoch-0 state tables synchronously (readable via
-            # preview) and defers the denied write + commit to the flusher,
-            # overlapping them with epoch 0's compute
+            # hands epoch 0 its state as in-memory plans and defers every
+            # durable write + the commit to the flusher, overlapping them
+            # with epoch 0's compute
             boot_tail = self.bootstrap()
-            _land("bootstrap_ready")
             start = 0
         else:
             start = self.store.meta()["crawl_epoch"] + 1
@@ -876,7 +757,6 @@ class CrawlEngine:
                 if abort.is_set():
                     break
                 ctx = self._phase1(epoch, prev_ev)
-                _land(f"phase1_done e{epoch}")
                 if ctx is None:
                     break
                 ev = threading.Event()
@@ -889,7 +769,6 @@ class CrawlEngine:
             phase1_exc = e
         finally:
             flusher.shutdown(wait=True)
-            _land("drain_done")
         flush_exc: BaseException | None = None
         for fut in futures:
             try:

@@ -340,15 +340,6 @@ class CrawlConfig:
     # fetch_epoch per image). Off by default: without forced recrawl every
     # fetch is a first fetch, so the lookup would be pure overhead.
     change_detection: bool = False
-    # MEASUREMENT-ONLY flag: replace the decode/PSNR/caption/phash
-    # validation UDF with a pure-Catalyst status (null→MISSING,
-    # oversize→OVERSIZE, else OK — no INVALID detection, no Arrow
-    # boundary, zero Python CPU). Valid only on worlds whose payloads are
-    # all well-formed (every bench world: failed=0), where statuses and
-    # the order/seen checksums are provably identical to the real
-    # validator's. Used for the scaling A/B that separates engine CPU
-    # from byte-movement cost; never for correctness runs.
-    noop_validate: bool = False
     # Wave-key broadcast ceiling (rows). Several joins build a hash side
     # from wave-bounded key sets (≤ wave_size rows of longs): the
     # next-frontier anti-join, the fetch hit/miss split, the
@@ -359,25 +350,3 @@ class CrawlConfig:
     # shuffle joins (plan-only switch; output byte-identical, pinned by
     # tests/test_wave_broadcast_paths.py). 32M longs ≈ 256 MB broadcast.
     wave_broadcast_max: int = 32_000_000
-    # Payload-write strategy for the bytes-bearing ``fetched`` table —
-    # two regimes, identical output (pinned by
-    # tests/test_payload_write_modes.py):
-    #   "cache":  phase 1 caches the wave's payload bytes alongside the
-    #             validate output and the flusher writes from the cache —
-    #             no per-epoch corpus re-scan. Right when a wave's payload
-    #             fits the cluster's storage memory (small-image crawls).
-    #   "rejoin": phase 1 caches only the NARROW validate output (bytes
-    #             take exactly one critical-path pass: corpus scan →
-    #             validate UDF → dropped); the flusher re-attaches
-    #             payloads via a corpus re-join. Right when a wave's
-    #             payload would not fit as a cache tier (the 100 TB
-    #             regime), at the cost of one extra corpus scan per epoch.
-    #   "auto":   "cache" iff wave_size × the corpus's measured bytes/row
-    #             (parquet-footer estimate, no data scan) stays within
-    #             payload_cache_max_bytes.
-    payload_write: str = "auto"
-    # The "auto" cache budget. Size it to the aggregate storage memory the
-    # deployment can spare for one wave's payload (local bench box: a few
-    # GB of the 48 GB heap; a 1000-executor cluster: effectively always
-    # cacheable — each executor holds wave_payload/1000).
-    payload_cache_max_bytes: int = 6 << 30

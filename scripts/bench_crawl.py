@@ -75,12 +75,6 @@ def main() -> None:
         help="enable cross-epoch lag(phash) change detection",
     )
     ap.add_argument(
-        "--noop-validate", action="store_true",
-        help="pure-Catalyst status instead of the decode UDF (measurement"
-        " A/B: separates engine CPU from byte movement; statuses and"
-        " checksums are identical on the all-well-formed bench worlds)",
-    )
-    ap.add_argument(
         "--time-politeness", action="store_true",
         help="enable crawl-delay politeness (its OWN regime: the schedule"
         " spreads across more epochs, so checksums are not comparable to"
@@ -129,7 +123,6 @@ def main() -> None:
         tls_scan=args.tls,
         change_detection=args.change_detection,
         time_politeness=args.time_politeness,
-        noop_validate=args.noop_validate,
     )
     if args.wave_broadcast_max is not None:
         import dataclasses
@@ -196,7 +189,6 @@ def main() -> None:
         "wave_size": args.wave_size,
         "per_host_quota": args.per_host_quota,
         "salt_per_host": args.salt,
-        "payload_write": engine.payload_write_mode,
         "seen_filter": args.seen_filter,
         "world": meta,
         "per_epoch": stats.per_epoch,

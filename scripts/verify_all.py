@@ -65,10 +65,12 @@ def main() -> None:
     oracle_rc, oracle_out, oracle_el = results["oracles"]
     plan_rc, plan_out, plan_el = results["plans"]
     # "ok " = hash-compared pass; "ok?" = rows-only pass (no oracle SQL) —
-    # both count as verified-green in the table
-    n_ok = sum(1 for ln in oracle_out.splitlines() if ln.startswith("ok"))
+    # counted apart so the table does not overstate hash-compared coverage
+    lines = oracle_out.splitlines()
+    n_ok = sum(1 for ln in lines if ln.startswith("ok "))
+    n_rows_only = sum(1 for ln in lines if ln.startswith("ok?"))
     verdict_oracle = next(
-        (ln for ln in oracle_out.splitlines() if ln.startswith("RESULT:")), "RESULT: ?"
+        (ln for ln in lines if ln.startswith("RESULT:")), "RESULT: ?"
     )
     verdict_plan = next(
         (
@@ -89,7 +91,7 @@ physical-plan red-flag audit over the same registry.
 
 | stage | verdict | queries ok | elapsed |
 |---|---|---|---|
-| oracle check (`scripts/check_oracles.py {SF_DIR}`) | {verdict_oracle} | {n_ok} | {oracle_el:.0f}s |
+| oracle check (`scripts/check_oracles.py {SF_DIR}`) | {verdict_oracle} | {n_ok} + {n_rows_only} rows-only | {oracle_el:.0f}s |
 | plan audit (`scripts/audit_plans.py {SF_DIR}`) | {verdict_plan} | — | {plan_el:.0f}s |
 
 ## Oracle check log

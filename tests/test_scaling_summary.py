@@ -12,7 +12,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
 
-from run_scaling import _median, _pair_efficiencies, _pick_best  # noqa: E402
+from run_scaling import (  # noqa: E402
+    _gate_pass, _median, _pair_efficiencies, _pick_best,
+)
 
 
 def _rep(thr, order=1, seen=2):
@@ -56,3 +58,14 @@ def test_pick_best_asserts_determinism():
     reps = [_rep(100.0), _rep(110.0, order=999)]
     with pytest.raises(AssertionError):
         _pick_best(reps)
+
+
+def test_gated_pass_reads_the_gated_median():
+    """Under --disk-gate the filed ``pass`` follows the pre-registered
+    headline (the gated median), not the ungated one, in both directions;
+    a window with no qualifying pair cannot pass."""
+    assert _gate_pass(True, 0.82, 0.78, 600.0) is False
+    assert _gate_pass(True, 0.78, 0.82, 600.0) is True
+    assert _gate_pass(True, 0.82, None, 600.0) is False
+    assert _gate_pass(True, 0.82, None, None) is True  # no gate: ungated median
+    assert _gate_pass(False, 0.9, 0.9, 600.0) is False  # determinism first
