@@ -5,27 +5,45 @@ Python) + the order-free intra-batch dedup rule (same canonical URL
 discovered twice in one epoch → min depth wins), mirroring
 ``ReferenceSimulator.enqueue_batch``.
 
-Python-boundary budget: exactly ONE Arrow UDF per candidate batch (the
-canonicalizer — already-canonical inputs short-circuit through a single
+Python-boundary budget: exactly ONE Python evaluation per candidate batch
+— a single ``mapInPandas`` pass that canonicalizes AND drops unparseable
+URLs (already-canonical inputs short-circuit through a single
 compiled-regex gate, see ``functions.urlnorm._canonicalize_row``; the
 rest pay a per-row canonicalizer that skips its O(len) passes when
-"%" / "/." are absent). Splitting fast/slow at the PLAN
-level (filter-pair + union) was measured 3x slower end-to-end: every
-downstream consumer of the candidates duplicates the two-branch subtree
-and per-epoch plan compilation dwarfs the saved Python. Host extraction
-is pure Catalyst: for a canonical URL the authority is the text between
-the FIRST '://' and the next '/' (instr, not substring_index(-1): a path
-may itself contain '://').
+"%" / "/." are absent). The NULL drop runs in Python, not as a
+``where(url_norm IS NOT NULL)`` over a pandas-UDF column: Catalyst pushes
+that filter below the projection by inlining the UDF call into the
+predicate, and the physical plan then evaluates the canonicalizer twice
+(two ``ArrowEvalPython`` nodes, one under the Filter and one under the
+Project). ``tests/test_python_evals.py`` pins the one-node plan.
+Splitting fast/slow at the PLAN level (filter-pair + union) was measured
+3x slower end-to-end: every downstream consumer of the candidates
+duplicates the two-branch subtree and per-epoch plan compilation dwarfs
+the saved Python. Host extraction is pure Catalyst: for a canonical URL
+the authority is the text between the FIRST '://' and the next '/'
+(instr, not substring_index(-1): a path may itself contain '://').
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from monocator_spark import spec
-from monocator_spark.functions.urlnorm import canonicalize_udf
+from monocator_spark.functions.urlnorm import canonicalize_series
 
 FRONTIER_COLS = ["url_norm", "url_hash", "host", "priority", "depth", "retries"]
+
+
+def _canonicalize_batches(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        norm = canonicalize_series(pdf["url"])
+        keep = norm.notna()
+        yield pd.DataFrame({"url_norm": norm[keep], "depth": pdf["depth"][keep]})
 
 
 def prepare_candidates(raw: DataFrame) -> DataFrame:
@@ -33,12 +51,13 @@ def prepare_candidates(raw: DataFrame) -> DataFrame:
 
     The canonicalizer is the only Python in this path (Arrow batches,
     vectorized fast path inside); hash, host and priority are Catalyst
-    expressions, so the whole stage after the UDF is whole-stage-codegen
-    eligible.
+    expressions, so the whole stage after the Python pass is
+    whole-stage-codegen eligible.
     """
+    depth_type = raw.schema["depth"].dataType.simpleString()
     return (
-        raw.withColumn("url_norm", canonicalize_udf(F.col("url")))
-        .where(F.col("url_norm").isNotNull())
+        raw.select("url", "depth")
+        .mapInPandas(_canonicalize_batches, f"url_norm string, depth {depth_type}")
         .withColumn("url_hash", F.xxhash64("url_norm"))
         .withColumn(
             "host",

@@ -139,9 +139,22 @@ def fetch_wave_bucketed(
     at all — every byte of epoch-critical-path work is executor-parallel.
     Misses surface as null corpus columns; the validation UDF maps a null
     payload to MISSING, so hit/miss needs no second join.
+
+    The join keeps the corpus's bucket count (64 in the bench worlds) as
+    its partition count; the joined rows are coalesced (no shuffle) to the
+    cluster's slot count before the validate UDF. Each Python task pays a
+    fixed start-up charge whatever its row count — about 0.2 CPU-s on a
+    4-vCPU host, mostly pyspark's per-task ``importlib.invalidate_caches()``
+    re-reading the zipped package — so validating a 64-bucket join in 64
+    small tasks on 4 slots spent most of its Python time on that charge.
+    Every reader of the cached result (retry / perm-failed, outlink
+    expansion with its canonicalizer, the next frontier, the output
+    flushes) inherits the coalesced partitioning. Where slots ≥ buckets
+    the coalesce is a no-op.
     """
     keyed = wave.withColumn("image_id", F.substring_index("url_norm", "/", -1))
-    joined = keyed.join(corpus_tbl, "image_id", "left")
+    slots = wave.sparkSession.sparkContext.defaultParallelism
+    joined = keyed.join(corpus_tbl, "image_id", "left").coalesce(slots)
     validate_udf = make_validate_udf(cfg)
     return joined.withColumn(
         "status",

@@ -10,6 +10,11 @@ For each `queries()` entry, render the formatted physical plan and flag:
     whitelisted per query below);
   * BatchEvalPython — a row-at-a-time Python UDF in the plan (only
     ArrowEvalPython / mapInPandas nodes are sanctioned);
+  * duplicated Python UDF — the same UDF call (same expression ids) in
+    more than one ArrowEvalPython node, i.e. one Arrow pass per row
+    planned twice (Catalyst inlines a pandas-UDF column into a pushed-down
+    filter, so ``withColumn(udf).where(col IS NOT NULL)`` evaluates it
+    under the Filter AND under the Project);
   * parquet scans that read every column (no column pruning at all) when
     the query's output is narrower.
 
@@ -21,14 +26,13 @@ from __future__ import annotations
 
 import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from monocator_spark.queries import REGISTRY  # noqa: E402
 from monocator_spark.session import get_spark  # noqa: E402
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 # queries whose BroadcastNestedLoopJoin is a deliberate tiny-side broadcast:
 # k centroids / q queries against the corpus (the documented IVF/top-k
@@ -51,6 +55,43 @@ BNLJ_OK = {
 }
 
 
+# a formatted plan's per-node detail header, e.g. "(5) ArrowEvalPython"
+_NODE_RE = re.compile(r"^\(\d+\) (\w+)", re.M)
+# an ArrowEvalPython node's UDF calls: the first bracket of its arguments
+_ARROW_EVAL_CALLS_RE = re.compile(
+    r"^\(\d+\) ArrowEvalPython\nInput .*\nArguments: \[(.*?)\], \[", re.M
+)
+
+
+def python_eval_nodes(plan: str) -> list[str]:
+    """Names of the nodes of a formatted plan that run Python workers."""
+    return [
+        n for n in _NODE_RE.findall(plan)
+        if "Python" in n or n.endswith(("InPandas", "InArrow"))
+    ]
+
+
+def _top_level_calls(args: str) -> list[str]:
+    calls, depth, start = [], 0, 0
+    for i, c in enumerate(args):
+        depth += (c == "(") - (c == ")")
+        if c == "," and depth == 0:
+            calls.append(args[start:i].strip())
+            start = i + 1
+    return calls + [args[start:].strip()]
+
+
+def duplicated_python_udfs(plan: str) -> list[str]:
+    """UDF calls that appear in more than one ArrowEvalPython node of a
+    formatted plan."""
+    counts = Counter(
+        call
+        for args in _ARROW_EVAL_CALLS_RE.findall(plan)
+        for call in set(_top_level_calls(args))
+    )
+    return sorted(c for c, n in counts.items() if n > 1)
+
+
 def audit(name: str, plan: str) -> list[str]:
     flags = []
     if "CartesianProduct" in plan:
@@ -59,20 +100,27 @@ def audit(name: str, plan: str) -> list[str]:
         flags.append("BroadcastNestedLoopJoin")
     if "BatchEvalPython" in plan:
         flags.append("row-at-a-time PythonUDF")
+    if duplicated_python_udfs(plan):
+        flags.append("duplicated Python UDF")
     return flags
 
 
+def formatted_plan(df) -> str:
+    spark = df.sparkSession
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+
+
 def main() -> None:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("plan-audit", cores=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     bad = {}
     for name, (fn, _sql) in REGISTRY.items():
-        df = fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = formatted_plan(fn(spark, sf_dir))
         flags = audit(name, plan)
         n_scans = len(re.findall(r"Scan parquet", plan))
         # formatted mode annotates codegen membership per-operator

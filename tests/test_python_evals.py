@@ -1,0 +1,85 @@
+"""At most one Python evaluation per row and per slot.
+
+Each Python task pays a fixed start-up charge whatever its row count, so
+the crawl's Arrow passes are bounded twice over: the canonicalizer runs
+once per candidate row (one Python node in the ``prepare_candidates``
+plan), and the bucketed fetch + validate pass runs one task per slot, not
+one per corpus bucket. Output equality of the bucketed fetch is guarded by
+``tests/test_bucketed_fetch.py::test_bucketed_equals_broadcast``.
+"""
+
+from __future__ import annotations
+
+import sys
+from pathlib import Path
+
+from pyspark.sql import functions as F
+
+from monocator_spark import spec
+from monocator_spark.datagen.distributed import (
+    CORPUS_BUCKETS, register_bucketed_corpus,
+)
+from monocator_spark.functions.urlnorm import canonicalize_udf
+from monocator_spark.operators import enqueue, fetch
+from test_bucketed_fetch import N_HOSTS, N_IMAGES, world  # noqa: F401
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+
+from audit_plans import audit, formatted_plan, python_eval_nodes  # noqa: E402
+
+URLS = [
+    ("http://H1.example:80/a/./b", 0),
+    ("http://h1.example/c", 1),
+    ("not-a-url", 0),
+    (None, 2),
+]
+
+
+def test_prepare_candidates_runs_one_python_eval(spark):
+    raw = spark.createDataFrame(URLS, "url string, depth int")
+    cands = enqueue.prepare_candidates(raw)
+    plan = formatted_plan(cands)
+    assert len(python_eval_nodes(plan)) == 1, plan
+    assert audit("prepare_candidates", plan) == []
+    # the unparseable and NULL urls are dropped by that one pass
+    assert sorted((r.url_norm, r.depth) for r in cands.collect()) == [
+        ("http://h1.example/a/b", 0),
+        ("http://h1.example/c", 1),
+    ]
+
+
+def test_audit_flags_a_pushed_down_udf_filter(spark):
+    """A pandas-UDF column filtered on IS NOT NULL is planned twice:
+    Catalyst inlines the UDF into the pushed-down predicate."""
+    raw = spark.createDataFrame(URLS, "url string, depth int")
+    twice = raw.withColumn("url_norm", canonicalize_udf("url")).where(
+        F.col("url_norm").isNotNull()
+    )
+    plan = formatted_plan(twice)
+    assert python_eval_nodes(plan) == ["ArrowEvalPython", "ArrowEvalPython"]
+    assert "duplicated Python UDF" in audit("twice", plan)
+
+
+def test_bucketed_fetch_runs_one_task_per_slot(spark, world):  # noqa: F811
+    slots = spark.sparkContext.defaultParallelism
+    assert CORPUS_BUCKETS > slots
+    corpus = spark.table(register_bucketed_corpus(spark, world))
+    seeds = spark.read.parquet(f"{world}/seeds").withColumn("depth", F.lit(0))
+    wave = (
+        enqueue.dedup_within_batch(enqueue.prepare_candidates(seeds))
+        .withColumn("quota", F.lit(4))
+        .withColumn("wave_pos", F.monotonically_increasing_id())
+    )
+    cfg = spec.CrawlConfig(n_images=N_IMAGES, n_hosts=N_HOSTS)
+    # the at-scale shape: a corpus too large to broadcast, so the fetch is
+    # the bucketed sort-merge join with one partition per corpus bucket
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        fetched = fetch.fetch_wave_bucketed(wave, corpus, cfg)
+        assert "SortMergeJoin" in formatted_plan(fetched)
+        assert fetched.rdd.getNumPartitions() <= slots
+        assert fetched.count() == wave.count()
+    finally:
+        spark.conf.set(key, prev)

@@ -52,7 +52,7 @@ def test_series_matches_scalar():
     assert out == [canonicalize_url(r) for r in raws]
 
 
-# --- JVM fast path ≡ Python canonicalizer (enqueue.prepare_candidates) ------
+# --- fast path ≡ full canonicalizer (enqueue.prepare_candidates) ------------
 
 _ADVERSARIAL = [
     "http://h0.example/img0000000001",
@@ -85,9 +85,10 @@ _ADVERSARIAL = [
 
 
 def test_fast_path_equivalence(spark):
-    """prepare_candidates (Catalyst pre-normalizer + strict-canonical gate +
-    UDF residue) must equal the pure-Python canonicalizer on every URL —
-    including shapes the fast path must REJECT to stay correct."""
+    """prepare_candidates (one mapInPandas pass: the already-canonical regex
+    gate, the full canonicalizer for every other URL, and the drop of
+    unparseable ones) must equal the pure-Python canonicalizer on every
+    URL — including shapes the fast path must REJECT to stay correct."""
     from pyspark.sql import functions as F
 
     from monocator_spark.datagen.corpus import apply_variant, url_of_image
