@@ -8,8 +8,11 @@ TAG ?= r05
 verify:
 	python scripts/verify_all.py $(TAG)
 
+# the ROADMAP tier-1 command
 test:
-	python -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors \
+	  -p no:cacheprovider
 
 bench:
 	python bench.py

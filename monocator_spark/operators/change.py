@@ -54,8 +54,7 @@ def decision_col() -> F.Column:
 
 
 def with_screenshot(
-    ok: DataFrame, hist: DataFrame | None, epoch: int,
-    cfg: spec.CrawlConfig | None = None,
+    ok: DataFrame, hist: DataFrame | None, epoch: int, cfg: spec.CrawlConfig
 ) -> DataFrame:
     """ok(fetched-OK rows) → + (prior_phash, policy, screenshot) columns.
 
@@ -76,17 +75,12 @@ def with_screenshot(
     is the first one's phash), not a cross-product on image_id.
 
     The history prune and prior join build from wave-bounded sides —
-    broadcast below cfg.wave_broadcast_max, shuffle join above it (a
+    broadcast below hints.WAVE_BROADCAST_MAX, shuffle join above it (a
     10^8-row wave cannot be a driver broadcast).
     """
     from monocator_spark.operators.hints import wave_side
 
-    detecting = cfg is not None and cfg.change_detection
-
-    def _ws(df: DataFrame) -> DataFrame:
-        return wave_side(df, cfg) if cfg is not None else F.broadcast(df)
-
-    if hist is None and not detecting:
+    if hist is None and not cfg.change_detection:
         # detection off: every fetch is a first fetch by definition
         out = ok.withColumn("prior_phash", F.lit(None).cast("long"))
     else:
@@ -106,7 +100,7 @@ def with_screenshot(
             # runs over O(wave) rows, never the whole fetched table
             hist_w = (
                 hist.select("image_id", "fetch_epoch", "wave_pos", "phash")
-                .join(_ws(cur_keys), "image_id", "left_semi")
+                .join(wave_side(cur_keys, cfg), "image_id", "left_semi")
                 .withColumn("url_hash", F.lit(None).cast("long"))
                 .unionByName(cur)
             )
@@ -116,7 +110,7 @@ def with_screenshot(
             .where(F.col("fetch_epoch") == epoch)
             .select("url_hash", "prior_phash")
         )
-        out = ok.join(_ws(prior), "url_hash", "left")
+        out = ok.join(wave_side(prior, cfg), "url_hash", "left")
     return out.withColumn("policy", policy_col()).withColumn(
         "screenshot", decision_col()
     )

@@ -71,10 +71,7 @@ def make_validate_udf(cfg: spec.CrawlConfig):
 
 
 def fetch_wave(
-    wave: DataFrame,
-    corpus: DataFrame,
-    cfg: spec.CrawlConfig,
-    persisted: list | None = None,
+    wave: DataFrame, corpus: DataFrame, cfg: spec.CrawlConfig
 ) -> DataFrame:
     """wave ⟕ corpus on image_id + validation status column.
 
@@ -96,7 +93,7 @@ def fetch_wave(
     misses are MISSING by construction and never cross the Arrow boundary.
 
     Both wave-bounded join sides (the wave itself and the hit-key set) are
-    broadcast only below cfg.wave_broadcast_max; above it the joins fall
+    broadcast only below hints.WAVE_BROADCAST_MAX; above it the joins fall
     back to shuffle joins (the bucketed layout, ``fetch_wave_bucketed``, is
     the intended at-scale path — this fallback keeps the generic path
     correct rather than OOMing the driver on a 10^8-row wave).

@@ -16,7 +16,8 @@ Reference semantics reproduced (SURVEY.md §2.1):
     /root/reference/src/TODO.MD:41): an anti-join against the persistent
     ``scan_cache`` table picks only never-scanned IPs for the fan-out; every
     wave host then equi-joins the (cache ∪ fresh) results, so two hosts on
-    one IP share a single scan.
+    one IP share a single scan. ``cached_probe`` is that one rule for every
+    module in ``MODULES`` (TLS and SMTP keyed by IP, DNS by host).
 
 Everything is pure Catalyst — no UDFs: xxhash64/pmod reproduce the shared
 spec functions bit-for-bit (the pure-Python simulator recomputes them via
@@ -32,9 +33,12 @@ joins prune to the wave's buckets.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, functions as F
 
 from monocator_spark import spec
+from monocator_spark.operators.hints import wave_side
 
 # columns of the persistent scan_cache table (state) and per-visit tls table
 CACHE_COLS = ["ip", "scan", "connect_ok", "n_versions", "certificates"]
@@ -174,51 +178,6 @@ def cert_chain_col(ip_col_name: str = "ip", ok_col: str = "connect_ok") -> F.Col
     )
 
 
-def scan_wave(
-    wave_hosts: DataFrame, cache: DataFrame | None, epoch: int,
-    cfg: spec.CrawlConfig | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """O13: (wave_hosts(host, ip), cache) → (tls_rows, new_cache_rows).
-
-    ``cache_hit`` is defined as "IP was in the cache before this epoch" —
-    order-free, so two co-hosted hosts discovered in the same wave both
-    count as misses but still share the single fresh scan.
-
-    The wave-IP probe side broadcasts only below cfg.wave_broadcast_max
-    (operators/hints.wave_side): a full-scale wave's distinct-IP set can be
-    10^7–10^8 rows, which must take the shuffle join against the cache.
-    """
-    from monocator_spark.operators.hints import wave_side
-
-    def _ws(df: DataFrame) -> DataFrame:
-        return wave_side(df, cfg) if cfg is not None else F.broadcast(df)
-
-    wave_ips = wave_hosts.select("ip").distinct()
-    if cache is None:
-        new_ips = wave_ips
-        cached_part = None
-    else:
-        new_ips = wave_ips.join(cache.select("ip"), "ip", "left_anti")
-        cached_part = cache.join(_ws(wave_ips), "ip", "inner").select(
-            "ip", "scan", "connect_ok", "certificates",
-            F.lit(True).alias("cache_hit"),
-        )
-    fresh = tls_scan_ips(new_ips)
-    fresh_part = fresh.select(
-        "ip", "scan", "connect_ok", "certificates",
-        F.lit(False).alias("cache_hit"),
-    )
-    all_scans = (
-        fresh_part if cached_part is None else cached_part.unionByName(fresh_part)
-    )
-    tls_rows = (
-        wave_hosts.join(all_scans, "ip", "inner")
-        .withColumn("epoch", F.lit(epoch))
-        .select(*TLS_COLS)
-    )
-    return tls_rows, fresh
-
-
 # -- O8 completion: DNS prefixes/rrtypes fan-out --------------------------------
 
 
@@ -290,40 +249,6 @@ def dns_resolve_records(hosts: DataFrame) -> DataFrame:
     )
 
 
-def dns_wave(
-    wave_hosts: DataFrame, cache: DataFrame | None, epoch: int,
-    cfg: spec.CrawlConfig | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(wave_hosts(host), dns_cache) → (dns_rows, new_cache_rows).
-
-    Same cache discipline as the TLS scan (O13), keyed by HOST: record sets
-    resolve once per host lifetime; every wave host joins (cache ∪ fresh).
-    """
-    from monocator_spark.operators.hints import wave_side
-
-    def _ws(df: DataFrame) -> DataFrame:
-        return wave_side(df, cfg) if cfg is not None else F.broadcast(df)
-
-    hosts = wave_hosts.select("host").distinct()
-    if cache is None:
-        new_hosts = hosts
-        cached_part = None
-    else:
-        new_hosts = hosts.join(cache.select("host"), "host", "left_anti")
-        cached_part = cache.join(_ws(hosts), "host", "inner").select(
-            "host", "records", "n_records", F.lit(True).alias("cache_hit")
-        )
-    fresh = dns_resolve_records(new_hosts)
-    fresh_part = fresh.select(
-        "host", "records", "n_records", F.lit(False).alias("cache_hit")
-    )
-    all_recs = (
-        fresh_part if cached_part is None else cached_part.unionByName(fresh_part)
-    )
-    dns_rows = all_recs.withColumn("epoch", F.lit(epoch)).select(*DNS_COLS)
-    return dns_rows, fresh
-
-
 # -- SMTP module (the last VisitRequest module) ----------------------------------
 
 
@@ -352,39 +277,63 @@ def smtp_probe_ips(ips: DataFrame) -> DataFrame:
     )
 
 
-def smtp_wave(
-    wave_hosts: DataFrame, cache: DataFrame | None, epoch: int,
-    cfg: spec.CrawlConfig | None = None,
+# -- O13: one cache rule for every visit module ----------------------------------
+
+
+def cached_probe(
+    wave_hosts: DataFrame, cache: DataFrame | None, key: str,
+    probe: Callable[[DataFrame], DataFrame], out_cols: list[str],
+    epoch: int, cfg: spec.CrawlConfig,
 ) -> tuple[DataFrame, DataFrame]:
-    """(wave_hosts(host, ip), smtp_cache) → (smtp_rows, new_cache_rows).
+    """(wave_hosts(host, ip), cache) → (module rows, new cache rows).
 
-    IP-keyed cache exactly like the TLS scan (O13): co-hosted hosts share
-    one SMTP probe; ``cache_hit`` = IP cached before this epoch.
+    The reference's ``fullScanCache.find(ip)`` before any scan (reference
+    TODO.MD:41), shared by every module: the wave's distinct ``key`` values
+    anti-join the cache, only never-probed keys run ``probe``, and every
+    wave host equi-joins (cache ∪ fresh) on ``key`` — two hosts on one IP
+    share a single probe. The carried columns are the ``out_cols`` the
+    probe emits; ``host``/``ip`` come from ``wave_hosts``.
+
+    ``cache_hit`` is defined as "key was in the cache before this epoch" —
+    order-free, so two co-hosted hosts discovered in the same wave both
+    count as misses but still share the single fresh probe.
+
+    The wave-key side of the cache join broadcasts only below
+    ``hints.WAVE_BROADCAST_MAX`` (operators/hints.wave_side): a full-scale
+    wave's distinct-IP set can be 10^7–10^8 rows, which must take the
+    shuffle join against the cache.
     """
-    from monocator_spark.operators.hints import wave_side
-
-    def _ws(df: DataFrame) -> DataFrame:
-        return wave_side(df, cfg) if cfg is not None else F.broadcast(df)
-
-    wave_ips = wave_hosts.select("ip").distinct()
-    if cache is None:
-        new_ips = wave_ips
-        cached_part = None
-    else:
-        new_ips = wave_ips.join(cache.select("ip"), "ip", "left_anti")
-        cached_part = cache.join(_ws(wave_ips), "ip", "inner").select(
-            "ip", "port", "connect_ok", "banner", F.lit(True).alias("cache_hit")
+    keys = wave_hosts.select(key).distinct()
+    fresh = probe(
+        keys if cache is None else keys.join(cache.select(key), key, "left_anti")
+    )
+    carried = [c for c in out_cols if c in fresh.columns]
+    probed = fresh.select(*carried, F.lit(False).alias("cache_hit"))
+    if cache is not None:
+        probed = (
+            cache.join(wave_side(keys, cfg), key, "inner")
+            .select(*carried, F.lit(True).alias("cache_hit"))
+            .unionByName(probed)
         )
-    fresh = smtp_probe_ips(new_ips)
-    fresh_part = fresh.select(
-        "ip", "port", "connect_ok", "banner", F.lit(False).alias("cache_hit")
-    )
-    all_probes = (
-        fresh_part if cached_part is None else cached_part.unionByName(fresh_part)
-    )
-    smtp_rows = (
-        wave_hosts.join(all_probes, "ip", "inner")
+    rows = (
+        wave_hosts.join(probed, key, "inner")
         .withColumn("epoch", F.lit(epoch))
-        .select(*SMTP_COLS)
+        .select(*out_cols)
     )
-    return smtp_rows, fresh
+    return rows, fresh
+
+
+class Module(NamedTuple):
+    flag: str  # CrawlConfig toggle (the VisitRequest module flag)
+    cache: str  # state table: one row per probed key, appended each epoch
+    table: str  # per-visit output table
+    key: str  # cache key: a wave_hosts column ("ip" or "host")
+    probe: Callable[[DataFrame], DataFrame]  # keys → new cache rows
+    out_cols: list[str]  # columns of the output table
+
+
+MODULES = (
+    Module("tls_scan", "scan_cache", "tls", "ip", tls_scan_ips, TLS_COLS),
+    Module("dns_scan", "dns_cache", "dns", "host", dns_resolve_records, DNS_COLS),
+    Module("smtp_scan", "smtp_cache", "smtp", "ip", smtp_probe_ips, SMTP_COLS),
+)

@@ -21,6 +21,7 @@ from __future__ import annotations
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -28,7 +29,9 @@ from pyspark.sql.types import (
 )
 
 from monocator_spark import spec
-from monocator_spark.operators import dedup, enqueue, fetch, outlinks, politeness
+from monocator_spark.operators import (
+    dedup, enqueue, fetch, outlinks, politeness, scan,
+)
 from monocator_spark.sim.simulator import MISSING, OK
 from monocator_spark.sources.store import SnapshotStore
 
@@ -250,49 +253,32 @@ class CrawlEngine:
                 else newn
             )
 
-        # scan modules (O8 DNS resolve/fan-out → O13 IP-cache split → O12
-        # TLS fan-out → SMTP banner grab) — each behind its VisitRequest
-        # flag; all share one resolved wave-host set per epoch
-        tls_rows = new_scan_rows = None
-        dns_rows = new_dns_rows = None
-        smtp_rows = new_smtp_rows = None
-        if cfg.tls_scan or cfg.dns_scan or cfg.smtp_scan:
-            from monocator_spark.operators import scan as scanop
-
-            wave_hosts = scanop.resolve_hosts(
+        # scan modules (O8 DNS resolve/fan-out → O13 cache split → O12 TLS
+        # fan-out → SMTP banner grab) — each behind its VisitRequest flag;
+        # all share one resolved wave-host set per epoch
+        modules = [m for m in scan.MODULES if getattr(cfg, m.flag)]
+        scans = []  # (module, output rows, new cache rows)
+        if modules:
+            wave_hosts = scan.resolve_hosts(
                 wave.select("host").distinct(), cfg.n_hosts
             ).cache()
             persisted.append(wave_hosts)
-        if cfg.tls_scan:
-            scan_cache = self.store.preview(self.spark, "scan_cache")
-            tls_rows, new_scan_rows = scanop.scan_wave(
-                wave_hosts, scan_cache, epoch, cfg
+        for m in modules:
+            rows, fresh = scan.cached_probe(
+                wave_hosts, self.store.preview(self.spark, m.cache), m.key,
+                m.probe, m.out_cols, epoch, cfg,
             )
-            # fresh scans feed BOTH the cache append and the tls rows —
+            # fresh probes feed BOTH the cache append and the output rows —
             # cache so the fan-out computes once
-            new_scan_rows = new_scan_rows.cache()
-            persisted.append(new_scan_rows)
-        if cfg.dns_scan:
-            dns_cache = self.store.preview(self.spark, "dns_cache")
-            dns_rows, new_dns_rows = scanop.dns_wave(
-                wave_hosts, dns_cache, epoch, cfg
-            )
-            new_dns_rows = new_dns_rows.cache()
-            persisted.append(new_dns_rows)
-        if cfg.smtp_scan:
-            smtp_cache = self.store.preview(self.spark, "smtp_cache")
-            smtp_rows, new_smtp_rows = scanop.smtp_wave(
-                wave_hosts, smtp_cache, epoch, cfg
-            )
-            new_smtp_rows = new_smtp_rows.cache()
-            persisted.append(new_smtp_rows)
+            persisted.append(fresh.cache())
+            scans.append((m, rows, fresh))
 
         t0 = time.monotonic()
         wave_cols = wave.select(*FRONTIER_COLS_Q, "wave_pos")
         if self.corpus_bucketed:
             fetched = fetch.fetch_wave_bucketed(wave_cols, self.corpus, cfg)
         else:
-            fetched = fetch.fetch_wave(wave_cols, self.corpus, cfg, persisted)
+            fetched = fetch.fetch_wave(wave_cols, self.corpus, cfg)
         # status tallies ride the epoch's one materializing action as an
         # Observation — no separate groupBy-count job per epoch
         from pyspark.sql import Observation
@@ -410,7 +396,7 @@ class CrawlEngine:
             )
 
         # next frontier: pending minus this wave, plus retries, plus admitted.
-        # The wave-key side broadcasts only below cfg.wave_broadcast_max —
+        # The wave-key side broadcasts only below hints.WAVE_BROADCAST_MAX —
         # a 10^8-row wave at full scale takes the shuffle anti-join instead
         # (operators/hints.wave_side, same switch as the fetch/change joins).
         from monocator_spark.operators.hints import wave_side
@@ -458,10 +444,7 @@ class CrawlEngine:
             "perm_failed": perm_failed, "new_entries": new_entries,
             "denied_new": denied_new, "lineage": lineage,
             "next_frontier": next_frontier, "bloom_next": bloom_next,
-            "tls_rows": tls_rows, "new_scan_rows": new_scan_rows,
-            "dns_rows": dns_rows, "new_dns_rows": new_dns_rows,
-            "smtp_rows": smtp_rows, "new_smtp_rows": new_smtp_rows,
-            "host_next": host_next_new,
+            "scans": scans, "host_next": host_next_new,
             "status_obs": status_obs, "frontier_obs": frontier_obs,
             "persisted": persisted,
         }
@@ -505,13 +488,9 @@ class CrawlEngine:
                 "seen", new_entries.select("url_hash", "url_norm"), epoch + 1
             )
             st.stage_overwrite("bloom", ctx["bloom_next"], epoch + 1)
-        if cfg.tls_scan:
-            # scan_cache is STATE: next epoch's anti-join must see it
-            st.stage_append("scan_cache", ctx["new_scan_rows"], epoch + 1)
-        if cfg.dns_scan:
-            st.stage_append("dns_cache", ctx["new_dns_rows"], epoch + 1)
-        if cfg.smtp_scan:
-            st.stage_append("smtp_cache", ctx["new_smtp_rows"], epoch + 1)
+        for m, _rows, fresh in ctx["scans"]:
+            # scan caches are STATE: next epoch's anti-join must see them
+            st.stage_append(m.cache, fresh, epoch + 1)
         if cfg.time_politeness and ctx["host_next"] is not None:
             # host_next is STATE: next epoch's range gate reads it
             st.stage_overwrite("host_next", ctx["host_next"], epoch + 1)
@@ -549,18 +528,10 @@ class CrawlEngine:
                 epoch + 1,
             ),
         ]
-        if cfg.tls_scan:
-            flushes.append(
-                lambda: st.stage_append("tls", ctx["tls_rows"], epoch + 1)
-            )
-        if cfg.dns_scan:
-            flushes.append(
-                lambda: st.stage_append("dns", ctx["dns_rows"], epoch + 1)
-            )
-        if cfg.smtp_scan:
-            flushes.append(
-                lambda: st.stage_append("smtp", ctx["smtp_rows"], epoch + 1)
-            )
+        flushes += [
+            partial(st.stage_append, m.table, rows, epoch + 1)
+            for m, rows, _fresh in ctx["scans"]
+        ]
         if cfg.follow_outlinks:
             flushes.append(
                 lambda: st.stage_append(

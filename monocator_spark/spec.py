@@ -340,13 +340,3 @@ class CrawlConfig:
     # fetch_epoch per image). Off by default: without forced recrawl every
     # fetch is a first fetch, so the lookup would be pure overhead.
     change_detection: bool = False
-    # Wave-key broadcast ceiling (rows). Several joins build a hash side
-    # from wave-bounded key sets (≤ wave_size rows of longs): the
-    # next-frontier anti-join, the fetch hit/miss split, the
-    # change-detection history prune. Broadcasting them is right at bench
-    # scale (1.8M keys ≈ 14 MB) but a real 10^10-frontier cluster runs
-    # 10^8–10^9-row waves — past Spark's 8 GB broadcast ceiling and the
-    # driver's memory — so above this threshold those joins fall back to
-    # shuffle joins (plan-only switch; output byte-identical, pinned by
-    # tests/test_wave_broadcast_paths.py). 32M longs ≈ 256 MB broadcast.
-    wave_broadcast_max: int = 32_000_000

@@ -45,8 +45,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from monocator_spark.queries.textops import (
-    _minhash_bands_of,
     dedup_newbatch_against_index,
+    minhash_band_index,
 )
 
 DOC_SCHEMA = StructType(
@@ -110,11 +110,7 @@ class StreamingCorpusDedup:
             f"{self.verdicts_dir}/batch_id={batch_id}"
         )
         kept = verdicts.where(F.col("verdict") == "new").select("doc_id")
-        new_bands = (
-            _minhash_bands_of(batch.join(kept, "doc_id"))
-            .groupBy("band", "h0", "h1")
-            .agg(F.min("doc_id").alias("rep_id"))
-        )
+        new_bands = minhash_band_index(batch.join(kept, "doc_id"))
         new_bands.write.mode("overwrite").parquet(
             f"{self.index_dir}/batch_id={batch_id}"
         )

@@ -46,11 +46,6 @@ def main() -> None:
         " either way the crawl output is byte-identical — the checksums"
         " prove it at world scale",
     )
-    ap.add_argument(
-        "--wave-broadcast-max", type=int, default=None,
-        help="override cfg.wave_broadcast_max (0 forces the shuffle"
-        " anti-join path for the wave-bounded joins — measurement A/B)",
-    )
     ap.add_argument("--wave-size", type=int, default=150_000)
     ap.add_argument("--epochs", type=int, default=3)
     ap.add_argument("--per-host-quota", type=int, default=8)
@@ -124,10 +119,6 @@ def main() -> None:
         change_detection=args.change_detection,
         time_politeness=args.time_politeness,
     )
-    if args.wave_broadcast_max is not None:
-        import dataclasses
-
-        cfg = dataclasses.replace(cfg, wave_broadcast_max=args.wave_broadcast_max)
     engine = CrawlEngine(spark, SnapshotStore(store_dir), args.world, cfg)
 
     if args.warmup:
