@@ -30,12 +30,21 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from monocator_spark.operators.band_index import (
+    BIT_KEYS,
+    band_groups,
+    band_index,
+    band_pairs,
+    bit_bands,
+    dedup_against_index,
+)
 from monocator_spark.queries.relational import T
 
 _N_GROUPS = 100
 _BANDS = 6
 _BAND_BITS = 10
 _THRESHOLD = 4
+_PHASH_VERIFY = f"bit_count(a.phash ^ b.phash) <= {_THRESHOLD}"
 
 # 60-bit base hash per group (15 md5 hex digits — always positive)
 _BASE_SPARK = (
@@ -68,44 +77,28 @@ _PHASH_DUCK = (
 )
 
 
+def _phash_bands(ph):
+    """(doc_id, phash) → + (band_id, band_val): 6 contiguous 10-bit bands."""
+    return bit_bands(ph, "phash", _BANDS, _BAND_BITS)
+
+
+def _phash(spark, sf_dir):
+    return T(spark, sf_dir, "documents").select(
+        "doc_id", F.expr(_PHASH_SPARK).alias("phash")
+    )
+
+
 def q_phash_hamming_pairs(spark, sf_dir):
     """Banded-LSH Hamming join: candidates from band-equality, exact
     popcount verify. Output ≡ brute-force pairs at Hamming ≤ 4."""
-    d = T(spark, sf_dir, "documents")
-    ph = d.select("doc_id", F.expr(_PHASH_SPARK).alias("phash"))
-    bands = ph.select(
-        "doc_id",
-        "phash",
-        F.explode(F.expr(f"sequence(0, {_BANDS - 1})")).alias("band_id"),
-    ).withColumn(
-        "band_val",
-        F.expr(
-            f"shiftright(phash, cast(band_id * {_BAND_BITS} as int))"
-            f" & cast({(1 << _BAND_BITS) - 1} as bigint)"
-        ),
+    pairs = band_pairs(
+        _phash_bands(_phash(spark, sf_dir)),
+        BIT_KEYS,
+        carry={"pa": "a.phash", "pb": "b.phash"},
+        verify=_PHASH_VERIFY,
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.phash").alias("pa"),
-            F.col("b.phash").alias("pb"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.expr("bit_count(pa ^ pb)").cast("int")
-        )
-        .where(F.col("hamming") <= _THRESHOLD)
-        .select("doc_a", "doc_b", "hamming")
+    return pairs.select(
+        "doc_a", "doc_b", F.expr("bit_count(pa ^ pb)").cast("int").alias("hamming")
     )
 
 
@@ -123,31 +116,8 @@ WHERE bit_count(xor(a.phash, b.phash)) <= {_THRESHOLD}
 def q_phash_dedup_groups(spark, sf_dir):
     """Image near-dup dedup as a pipeline consumes it: every image mapped
     to a cluster representative (min doc_id sharing any hash band) — the
-    O(images) output shape, not the quadratic pair list. Same window-min
-    trick as ``minhash_dedup_groups``: referencing the band table twice
-    through a groupBy+self-join would recompute it."""
-    from pyspark.sql import Window
-
-    d = T(spark, sf_dir, "documents")
-    ph = d.select("doc_id", F.expr(_PHASH_SPARK).alias("phash"))
-    bands = ph.select(
-        "doc_id",
-        F.explode(F.expr(f"sequence(0, {_BANDS - 1})")).alias("band_id"),
-        "phash",
-    ).withColumn(
-        "band_val",
-        F.expr(
-            f"shiftright(phash, cast(band_id * {_BAND_BITS} as int))"
-            f" & cast({(1 << _BAND_BITS) - 1} as bigint)"
-        ),
-    )
-    wb = Window.partitionBy("band_id", "band_val")
-    return (
-        bands.withColumn("grp_rep", F.min("doc_id").over(wb))
-        .groupBy("doc_id")
-        .agg(F.min("grp_rep").alias("rep_id"))
-        .withColumn("is_dup", F.col("doc_id") > F.col("rep_id"))
-    )
+    O(images) output shape, not the quadratic pair list."""
+    return band_groups(_phash_bands(_phash(spark, sf_dir)), BIT_KEYS)
 
 
 SQL_PHASH_GROUPS = f"""
@@ -189,77 +159,11 @@ FROM rep GROUP BY doc_id
 # batch does not probe.
 
 
-def _phash_bands_of(ph):
-    """(doc_id, phash) → (doc_id, phash, band_id, band_val)."""
-    return ph.select(
-        "doc_id",
-        "phash",
-        F.explode(F.expr(f"sequence(0, {_BANDS - 1})")).alias("band_id"),
-    ).withColumn(
-        "band_val",
-        F.expr(
-            f"shiftright(phash, cast(band_id * {_BAND_BITS} as int))"
-            f" & cast({(1 << _BAND_BITS) - 1} as bigint)"
-        ),
-    )
-
-
-def phash_band_index(old_ph):
-    """The persisted image-dedup state: every (band bucket, member, hash)
-    of the existing corpus. Written once at ingest; incremental runs load
-    this instead of the corpus."""
-    return _phash_bands_of(old_ph).select("band_id", "band_val", "doc_id", "phash")
-
-
-def phash_dedup_newbatch(new_ph, index):
-    """Dedup a new batch of (doc_id, phash) against (a) the persisted band
-    index and (b) itself, popcount-verified at Hamming ≤ _THRESHOLD.
-    Touches only `index` for the old side."""
-    bands = _phash_bands_of(new_ph)
-    ex = (
-        bands.alias("n")
-        .join(
-            index.alias("i"),
-            (F.col("n.band_id") == F.col("i.band_id"))
-            & (F.col("n.band_val") == F.col("i.band_val")),
-        )
-        .where(F.expr(f"bit_count(n.phash ^ i.phash) <= {_THRESHOLD}"))
-        .groupBy(F.col("n.doc_id").alias("doc_id"))
-        .agg(F.min(F.col("i.doc_id")).alias("ex_rep"))
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    batch = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(F.expr(f"bit_count(a.phash ^ b.phash) <= {_THRESHOLD}"))
-        .groupBy(F.col("b.doc_id").alias("doc_id"))
-        .agg(F.min(F.col("a.doc_id")).alias("batch_rep"))
-    )
-    return (
-        new_ph.select("doc_id")
-        .join(ex, "doc_id", "left")
-        .join(batch, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("ex_rep").isNotNull(), F.lit("dup_existing"))
-            .when(F.col("batch_rep").isNotNull(), F.lit("dup_batch"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-            F.coalesce("ex_rep", "batch_rep", F.col("doc_id")).alias("rep_id"),
-        )
-    )
-
-
 def q_phash_incremental_newbatch(spark, sf_dir):
     """Deterministic 80/20 corpus split (md5 of doc_id): the 80% is the
     already-ingested image corpus whose band index is the persisted state,
     the 20% is this epoch's fetched batch."""
-    d = T(spark, sf_dir, "documents")
-    ph = d.select("doc_id", F.expr(_PHASH_SPARK).alias("phash"))
+    ph = _phash(spark, sf_dir)
     is_new = (
         F.expr(
             "cast(conv(substr(md5(concat('imginc|', cast(doc_id as string))),1,15),16,10)"
@@ -268,8 +172,10 @@ def q_phash_incremental_newbatch(spark, sf_dir):
         % 5
         == 0
     )
-    index = phash_band_index(ph.where(~is_new))
-    return phash_dedup_newbatch(ph.where(is_new), index)
+    index = band_index(_phash_bands(ph.where(~is_new)), BIT_KEYS, carry=["phash"])
+    return dedup_against_index(
+        _phash_bands(ph.where(is_new)), index, BIT_KEYS, verify=_PHASH_VERIFY
+    )
 
 
 SQL_PHASH_INCREMENTAL = f"""

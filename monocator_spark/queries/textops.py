@@ -14,6 +14,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from monocator_spark.operators.band_index import (
+    BIT_KEYS,
+    band_groups,
+    band_index,
+    band_pairs,
+    bit_bands,
+    dedup_against_index,
+)
 from monocator_spark.queries.relational import T
 
 # token count without split(): (len - len(without-spaces)) + 1
@@ -527,14 +535,19 @@ WHERE CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter) >= 0.8
 
 
 # -- MinHash signatures ----------------------------------------------------------------
-def q_minhash_signature(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    sh = d.select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh")).distinct()
+def _minhash_signature(docs):
+    """(doc_id, text) → (doc_id, seed, minhash): 8 md5 seeds over each
+    doc's distinct shingles."""
+    sh = docs.select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh")).distinct()
     seeded = sh.withColumn("seed", F.explode(F.sequence(F.lit(0), F.lit(7))))
     hashed = seeded.withColumn(
         "hv", F.expr(_md5long("concat(sh, '|', cast(seed as string))"))
     )
     return hashed.groupBy("doc_id", "seed").agg(F.min("hv").alias("minhash"))
+
+
+def q_minhash_signature(spark, sf_dir):
+    return _minhash_signature(T(spark, sf_dir, "documents"))
 
 
 SQL_MINHASH = f"""
@@ -548,26 +561,26 @@ FROM seeded GROUP BY doc_id, seed
 
 
 # -- MinHash LSH banding → candidate pairs ------------------------------------------------
-def q_minhash_lsh_pairs(spark, sf_dir):
-    sig = q_minhash_signature(spark, sf_dir)
-    bands = sig.groupBy(
-        "doc_id", F.floor(F.col("seed") / 2).cast("long").alias("band")
-    ).agg(
-        F.min(F.when(F.col("seed") % 2 == 0, F.col("minhash"))).alias("h0"),
-        F.min(F.when(F.col("seed") % 2 == 1, F.col("minhash"))).alias("h1"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
+MINHASH_KEYS = ("band", "h0", "h1")
+
+
+def minhash_bands_of(docs):
+    """(doc_id, text) → (doc_id, band, h0, h1): the 8 signature seeds banded
+    4×2 — the one banding every MinHash site (pairs, groups, the persisted
+    index and the batch probe) shares."""
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h0") == F.col("b.h0"))
-            & (F.col("a.h1") == F.col("b.h1"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        _minhash_signature(docs)
+        .groupBy("doc_id", F.floor(F.col("seed") / 2).cast("long").alias("band"))
+        .agg(
+            F.min(F.when(F.col("seed") % 2 == 0, F.col("minhash"))).alias("h0"),
+            F.min(F.when(F.col("seed") % 2 == 1, F.col("minhash"))).alias("h1"),
         )
-        .select(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
-        .distinct()
     )
+
+
+def q_minhash_lsh_pairs(spark, sf_dir):
+    bands = minhash_bands_of(T(spark, sf_dir, "documents"))
+    return band_pairs(bands, MINHASH_KEYS, ("doc1", "doc2"))
 
 
 SQL_LSH = f"""
@@ -594,25 +607,7 @@ def q_minhash_dedup_groups(spark, sf_dir):
     each doc mapped to a cluster representative (min doc_id sharing any LSH
     band), not the quadratic all-pairs list. Output size is O(docs) no
     matter how dense the duplicate clusters are."""
-    from pyspark.sql import Window
-
-    sig = q_minhash_signature(spark, sf_dir)
-    bands = sig.groupBy(
-        "doc_id", F.floor(F.col("seed") / 2).cast("long").alias("band")
-    ).agg(
-        F.min(F.when(F.col("seed") % 2 == 0, F.col("minhash"))).alias("h0"),
-        F.min(F.when(F.col("seed") % 2 == 1, F.col("minhash"))).alias("h1"),
-    )
-    # bucket representative via a window-min rather than a groupBy+self-join:
-    # referencing `bands` twice would make Spark recompute the whole
-    # signature pipeline (explode x seeds + md5 + two aggs) a second time
-    wb = Window.partitionBy("band", "h0", "h1")
-    return (
-        bands.withColumn("grp_rep", F.min("doc_id").over(wb))
-        .groupBy("doc_id")
-        .agg(F.min("grp_rep").alias("rep_id"))
-        .withColumn("is_dup", F.col("doc_id") > F.col("rep_id"))
-    )
+    return band_groups(minhash_bands_of(T(spark, sf_dir, "documents")), MINHASH_KEYS)
 
 
 SQL_DEDUP_GROUPS = f"""
@@ -657,74 +652,14 @@ GROUP BY b.doc_id
 # rows and nothing else.
 
 
-def _minhash_bands_of(docs):
-    """(doc_id, text) → (doc_id, band, h0, h1): 8 md5 minhash seeds banded
-    4×2 — identical scheme to q_minhash_lsh_pairs, parameterized over an
-    arbitrary document slice so index build and batch probe share it."""
-    sh = docs.select("doc_id", F.expr(_SHINGLE_SPARK).alias("sh")).distinct()
-    seeded = sh.withColumn("seed", F.explode(F.sequence(F.lit(0), F.lit(7))))
-    sig = (
-        seeded.withColumn(
-            "hv", F.expr(_md5long("concat(sh, '|', cast(seed as string))"))
-        )
-        .groupBy("doc_id", "seed")
-        .agg(F.min("hv").alias("minhash"))
-    )
-    return sig.groupBy(
-        "doc_id", F.floor(F.col("seed") / 2).cast("long").alias("band")
-    ).agg(
-        F.min(F.when(F.col("seed") % 2 == 0, F.col("minhash"))).alias("h0"),
-        F.min(F.when(F.col("seed") % 2 == 1, F.col("minhash"))).alias("h1"),
-    )
-
-
-def minhash_band_index(old_docs):
-    """The persisted dedup state: every occupied band bucket of the existing
-    corpus with its representative (min doc_id). This is what a deployment
-    writes to its state table after each ingest; `old_docs` is only read
-    here, at index-BUILD time — incremental runs load the index instead."""
-    return (
-        _minhash_bands_of(old_docs)
-        .groupBy("band", "h0", "h1")
-        .agg(F.min("doc_id").alias("rep_id"))
-    )
-
-
-def dedup_newbatch_against_index(new_docs, index):
-    """Dedup a new batch against (a) the persisted band index and (b)
-    itself. Touches only `index` for the old side — never old documents."""
-    from pyspark.sql import Window
-
-    bands = _minhash_bands_of(new_docs)
-    ex = (
-        bands.join(index, ["band", "h0", "h1"])
-        .groupBy("doc_id")
-        .agg(F.min("rep_id").alias("ex_rep"))
-    )
-    wb = Window.partitionBy("band", "h0", "h1")
-    batch = (
-        bands.withColumn("brep", F.min("doc_id").over(wb))
-        .groupBy("doc_id")
-        .agg(F.min("brep").alias("batch_rep"))
-    )
-    return batch.join(ex, "doc_id", "left").select(
-        "doc_id",
-        F.when(F.col("ex_rep").isNotNull(), F.lit("dup_existing"))
-        .when(F.col("batch_rep") < F.col("doc_id"), F.lit("dup_batch"))
-        .otherwise(F.lit("new"))
-        .alias("verdict"),
-        F.coalesce("ex_rep", "batch_rep", F.col("doc_id")).alias("rep_id"),
-    )
-
-
 def q_dedup_incremental_newbatch(spark, sf_dir):
     """Deterministic 80/20 corpus split (md5 of doc_id): the 80% is the
     'existing corpus' whose band index is the persisted state, the 20% is
     the incoming batch deduped against that index + itself."""
     d = T(spark, sf_dir, "documents")
     is_new = F.expr(_md5long("concat('incr|', cast(doc_id as string))")) % 5 == 0
-    index = minhash_band_index(d.where(~is_new))
-    return dedup_newbatch_against_index(d.where(is_new), index)
+    index = band_index(minhash_bands_of(d.where(~is_new)), MINHASH_KEYS)
+    return dedup_against_index(minhash_bands_of(d.where(is_new)), index, MINHASH_KEYS)
 
 
 SQL_DEDUP_INCREMENTAL = f"""
@@ -827,45 +762,21 @@ _SH_THRESHOLD = 3  # < _SH_BANDS, the pigeonhole condition
 
 
 def _simhash_bands(spark, sf_dir):
-    sh = q_simhash_docs(spark, sf_dir)
-    return sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.expr(f"sequence(0, {_SH_BANDS - 1})")).alias("band_id"),
-    ).withColumn(
-        "band_val",
-        F.expr(
-            f"shiftright(simhash, cast(band_id * {_SH_BAND_BITS} as int))"
-            f" & cast({(1 << _SH_BAND_BITS) - 1} as bigint)"
-        ),
-    )
+    return bit_bands(q_simhash_docs(spark, sf_dir), "simhash", _SH_BANDS, _SH_BAND_BITS)
 
 
 def q_simhash_hamming_pairs(spark, sf_dir):
     """Text near-dup pairs at simhash Hamming <= 3: banded-LSH candidates
     (band-equality join) verified by exact popcount. Output ≡ the naive
     quadratic oracle; the engine never materializes all-pairs."""
-    bands = _simhash_bands(spark, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sa"),
-            F.col("b.simhash").alias("sb"),
-        )
-        .distinct()
+    pairs = band_pairs(
+        _simhash_bands(spark, sf_dir),
+        BIT_KEYS,
+        carry={"sa": "a.simhash", "sb": "b.simhash"},
+        verify=f"bit_count(a.simhash ^ b.simhash) <= {_SH_THRESHOLD}",
     )
-    return (
-        cand.withColumn("hamming", F.expr("bit_count(sa ^ sb)").cast("int"))
-        .where(F.col("hamming") <= _SH_THRESHOLD)
-        .select("doc_a", "doc_b", "hamming")
+    return pairs.select(
+        "doc_a", "doc_b", F.expr("bit_count(sa ^ sb)").cast("int").alias("hamming")
     )
 
 
@@ -887,18 +798,8 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {_SH_THRESHOLD}
 def q_simhash_dedup_groups(spark, sf_dir):
     """SimHash dedup as a pipeline consumes it: every doc mapped to a
     cluster representative (min doc_id sharing any hash band) — O(docs)
-    output regardless of cluster density; window-min, no self-join
-    recompute (same shape as ``minhash_dedup_groups``)."""
-    from pyspark.sql import Window
-
-    bands = _simhash_bands(spark, sf_dir)
-    wb = Window.partitionBy("band_id", "band_val")
-    return (
-        bands.withColumn("grp_rep", F.min("doc_id").over(wb))
-        .groupBy("doc_id")
-        .agg(F.min("grp_rep").alias("rep_id"))
-        .withColumn("is_dup", F.col("doc_id") > F.col("rep_id"))
-    )
+    output regardless of cluster density."""
+    return band_groups(_simhash_bands(spark, sf_dir), BIT_KEYS)
 
 
 SQL_SIMHASH_GROUPS = f"""

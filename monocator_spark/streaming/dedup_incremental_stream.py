@@ -15,11 +15,12 @@ Mechanics (same discipline as ``StreamingEnqueue``):
 * file-source ``readStream`` over a parquet feed directory of
   (doc_id, text) rows; ``maxFilesPerTrigger=1`` so every dropped file is
   its own micro-batch even under ``Trigger.AvailableNow``;
-* each batch calls the SAME ``dedup_newbatch_against_index`` the batch op
-  uses (the streaming path adds no second dedup implementation), reading
-  the index accumulated under ``index_dir``;
+* each batch calls the SAME ``band_index.dedup_against_index`` the batch
+  op uses (the streaming path adds no second dedup implementation),
+  reading the index accumulated under ``index_dir``;
 * kept docs (verdict 'new' — exactly the batch-group representatives plus
-  the genuinely novel docs) have their bands appended to the index;
+  the genuinely novel docs) have their bands appended to the index
+  (``band_index.band_index``);
 * exactly-once across replays WITHOUT a transaction log: both outputs are
   written to batch-id-keyed subdirectories (``verdicts/batch_id=N``,
   ``index_dir/batch_id=N``) with mode=overwrite. The computation is a
@@ -39,15 +40,11 @@ index with no rebuild.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from monocator_spark.queries.textops import (
-    dedup_newbatch_against_index,
-    minhash_band_index,
-)
+from monocator_spark.operators.band_index import band_index, dedup_against_index
+from monocator_spark.queries.textops import MINHASH_KEYS, minhash_bands_of
 
 DOC_SCHEMA = StructType(
     [
@@ -77,15 +74,23 @@ class StreamingCorpusDedup:
         self.checkpoint_dir = checkpoint_dir
 
     # -- state -----------------------------------------------------------
-    def _index_dirs(self, before: int | None = None) -> list[str]:
-        import glob
+    def _hadoop_path(self, path: str):
+        """(FileSystem, Path) of ``path`` under the session's Hadoop conf."""
+        sc = self.spark.sparkContext
+        p = sc._jvm.org.apache.hadoop.fs.Path(path)
+        return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
 
+    def _index_dirs(self, before: int | None = None) -> list[str]:
+        """The ``batch_id=N`` index dirs, listed through the Hadoop
+        FileSystem of ``index_dir`` (any scheme Spark reads: file://, hdfs://,
+        s3a://), so the listing sees what the executors' reads see."""
+        fs, pattern = self._hadoop_path(f"{self.index_dir}/batch_id=*")
         dirs = []
-        for d in glob.glob(f"{self.index_dir}/batch_id=*"):
-            bid = int(d.rsplit("=", 1)[1])
+        for st in fs.globStatus(pattern) or []:
+            bid = int(st.getPath().getName().rsplit("=", 1)[1])
             if before is None or bid < before:
-                dirs.append(d)
-        return sorted(dirs)
+                dirs.append((bid, st.getPath().toString()))
+        return [d for _, d in sorted(dirs)]
 
     def load_index(self, before: int | None = None) -> DataFrame:
         """The band index accumulated so far (empty on first start).
@@ -94,9 +99,8 @@ class StreamingCorpusDedup:
         dedup against exactly the state that preceded it — reading its own
         (partially or fully written) index dir back would turn every one of
         its docs into a self-duplicate and break replay determinism. The
-        O(batches) directory listing is driver-side bookkeeping; a
-        deployment compacts old batch dirs the way the crawl store
-        compacts epochs."""
+        directory listing is O(batches) driver-side bookkeeping: nothing
+        compacts the batch dirs yet."""
         dirs = self._index_dirs(before)
         if not dirs:
             return self.spark.createDataFrame([], _INDEX_SCHEMA)
@@ -105,15 +109,15 @@ class StreamingCorpusDedup:
     # -- one micro-batch -------------------------------------------------
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
         index = self.load_index(before=batch_id)
-        verdicts = dedup_newbatch_against_index(batch, index).localCheckpoint()
+        bands = minhash_bands_of(batch)
+        verdicts = dedup_against_index(bands, index, MINHASH_KEYS).localCheckpoint()
         verdicts.write.mode("overwrite").parquet(
             f"{self.verdicts_dir}/batch_id={batch_id}"
         )
         kept = verdicts.where(F.col("verdict") == "new").select("doc_id")
-        new_bands = minhash_band_index(batch.join(kept, "doc_id"))
-        new_bands.write.mode("overwrite").parquet(
-            f"{self.index_dir}/batch_id={batch_id}"
-        )
+        band_index(bands.join(kept, "doc_id"), MINHASH_KEYS).write.mode(
+            "overwrite"
+        ).parquet(f"{self.index_dir}/batch_id={batch_id}")
 
     # -- drivers ---------------------------------------------------------
     def _stream(self):
@@ -132,7 +136,8 @@ class StreamingCorpusDedup:
         """Drain everything currently in the feed dir, one batch per file,
         then stop. Re-invoking after new files arrive resumes from the
         checkpoint; re-invoking with nothing new is a no-op."""
-        os.makedirs(self.feed_dir, exist_ok=True)
+        fs, feed = self._hadoop_path(self.feed_dir)
+        fs.mkdirs(feed)
         q = self._stream().start()
         q.awaitTermination()
 

@@ -20,6 +20,10 @@ For each `queries()` entry, render the formatted physical plan and flag:
 
 Exit code 1 if any un-whitelisted flag fires — wired for CI use. Prints a
 per-query one-liner so the output doubles as plan evidence.
+
+Usage: ``python scripts/audit_plans.py [SF_DIR] [name,name,...]`` — the
+optional second argument audits only the named queries, as in
+``scripts/check_oracles.py``.
 """
 
 from __future__ import annotations
@@ -116,10 +120,13 @@ def formatted_plan(df) -> str:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = sys.argv[2].split(",") if len(sys.argv) > 2 else None
     spark = get_spark("plan-audit", cores=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     bad = {}
     for name, (fn, _sql) in REGISTRY.items():
+        if only and name not in only:
+            continue
         plan = formatted_plan(fn(spark, sf_dir))
         flags = audit(name, plan)
         n_scans = len(re.findall(r"Scan parquet", plan))

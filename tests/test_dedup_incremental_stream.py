@@ -2,7 +2,7 @@
 
 Pins the three contracts:
   1. SEQUENTIAL-BATCH EQUIVALENCE — the stream's per-batch verdicts equal
-     running the batch twin (`dedup_newbatch_against_index`) by hand batch
+     running the batch twin (`band_index.dedup_against_index`) by hand batch
      by batch, growing the index with kept docs between batches;
   2. CROSS-BATCH STATE — a batch-2 doc duplicating a batch-1 KEPT doc is
      dup_existing against it, and a batch-2 doc duplicating a batch-1
@@ -51,10 +51,8 @@ def _write_feed(spark, feed_dir: str, rows, name: str):
 def test_streaming_matches_sequential_batch_twin(spark, tmp_root):
     from pyspark.sql import functions as F
 
-    from monocator_spark.queries.textops import (
-        _minhash_bands_of,
-        dedup_newbatch_against_index,
-    )
+    from monocator_spark.operators.band_index import dedup_against_index
+    from monocator_spark.queries.textops import MINHASH_KEYS, minhash_bands_of
     from monocator_spark.streaming.dedup_incremental_stream import (
         StreamingCorpusDedup,
     )
@@ -88,14 +86,14 @@ def test_streaming_matches_sequential_batch_twin(spark, tmp_root):
     b1 = spark.createDataFrame(BATCH1, "doc_id long, text string")
     b2 = spark.createDataFrame(BATCH2, "doc_id long, text string")
     empty = spark.createDataFrame([], "band bigint, h0 bigint, h1 bigint, rep_id bigint")
-    v1 = dedup_newbatch_against_index(b1, empty)
+    v1 = dedup_against_index(minhash_bands_of(b1), empty, MINHASH_KEYS)
     kept1 = v1.where(F.col("verdict") == "new").select("doc_id")
     idx1 = (
-        _minhash_bands_of(b1.join(kept1, "doc_id"))
+        minhash_bands_of(b1.join(kept1, "doc_id"))
         .groupBy("band", "h0", "h1")
         .agg(F.min("doc_id").alias("rep_id"))
     )
-    v2 = dedup_newbatch_against_index(b2, idx1)
+    v2 = dedup_against_index(minhash_bands_of(b2), idx1, MINHASH_KEYS)
     expected = {
         r["doc_id"]: (r["verdict"], r["rep_id"])
         for r in v1.unionByName(v2).collect()
@@ -112,3 +110,32 @@ def test_streaming_matches_sequential_batch_twin(spark, tmp_root):
         for r in sd.verdicts().collect()
     }
     assert got2 == got
+
+
+def test_hadoop_uri_dirs_see_the_index(spark, tmp_root):
+    """State dirs given as ``file://`` URIs: the index written after batch 1
+    must be listed (through the Hadoop FileSystem, not a local glob) when
+    batch 2 runs, so doc 10 is dup_existing against doc 1."""
+    from monocator_spark.streaming.dedup_incremental_stream import (
+        StreamingCorpusDedup,
+    )
+
+    base = f"{tmp_root}/incdedup_uri"
+    uri = f"file://{base}"
+    sd = StreamingCorpusDedup(
+        spark,
+        feed_dir=f"{uri}/feed",
+        index_dir=f"{uri}/index",
+        verdicts_dir=f"{uri}/verdicts",
+        checkpoint_dir=f"{uri}/ckpt",
+    )
+    _write_feed(spark, f"{base}/feed", BATCH1, "b1")
+    sd.run_available()
+    _write_feed(spark, f"{base}/feed", BATCH2, "b2")
+    sd.run_available()
+
+    got = {
+        r["doc_id"]: (r["verdict"], r["rep_id"])
+        for r in sd.verdicts().collect()
+    }
+    assert got[10] == ("dup_existing", 1)

@@ -21,11 +21,12 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_index_artifact_reproduces_full_query(spark, tmp_root):
     from pyspark.sql import functions as F
 
+    from monocator_spark.operators.band_index import band_index, dedup_against_index
     from monocator_spark.queries.relational import T
     from monocator_spark.queries.textops import (
+        MINHASH_KEYS,
         _md5long,
-        dedup_newbatch_against_index,
-        minhash_band_index,
+        minhash_bands_of,
         q_dedup_incremental_newbatch,
     )
 
@@ -34,11 +35,15 @@ def test_index_artifact_reproduces_full_query(spark, tmp_root):
 
     # the deployment path: build the index once, persist it, forget old docs
     idx_path = f"{tmp_root}/band_index"
-    minhash_band_index(d.where(~is_new)).write.mode("overwrite").parquet(idx_path)
+    band_index(minhash_bands_of(d.where(~is_new)), MINHASH_KEYS).write.mode(
+        "overwrite"
+    ).parquet(idx_path)
     loaded = spark.read.parquet(idx_path)
     incremental = {
         r["doc_id"]: (r["verdict"], r["rep_id"])
-        for r in dedup_newbatch_against_index(d.where(is_new), loaded).collect()
+        for r in dedup_against_index(
+            minhash_bands_of(d.where(is_new)), loaded, MINHASH_KEYS
+        ).collect()
     }
 
     full = {
@@ -54,10 +59,15 @@ def test_phash_index_artifact_reproduces_full_query(spark, tmp_root):
     band index ARTIFACT (old documents gone) reproduces the full query."""
     from pyspark.sql import functions as F
 
+    from monocator_spark.operators.band_index import (
+        BIT_KEYS,
+        band_index,
+        dedup_against_index,
+    )
     from monocator_spark.queries.imaging import (
         _PHASH_SPARK,
-        phash_band_index,
-        phash_dedup_newbatch,
+        _PHASH_VERIFY,
+        _phash_bands,
         q_phash_incremental_newbatch,
     )
     from monocator_spark.queries.relational import T
@@ -74,11 +84,15 @@ def test_phash_index_artifact_reproduces_full_query(spark, tmp_root):
         == 0
     )
     idx_path = f"{tmp_root}/phash_index"
-    phash_band_index(ph.where(~is_new)).write.mode("overwrite").parquet(idx_path)
+    band_index(_phash_bands(ph.where(~is_new)), BIT_KEYS, carry=["phash"]).write.mode(
+        "overwrite"
+    ).parquet(idx_path)
     loaded = spark.read.parquet(idx_path)
     incremental = {
         r["doc_id"]: (r["verdict"], r["rep_id"])
-        for r in phash_dedup_newbatch(ph.where(is_new), loaded).collect()
+        for r in dedup_against_index(
+            _phash_bands(ph.where(is_new)), loaded, BIT_KEYS, verify=_PHASH_VERIFY
+        ).collect()
     }
     full = {
         r["doc_id"]: (r["verdict"], r["rep_id"])
@@ -137,10 +151,8 @@ def test_phash_incremental_matches_bruteforce_twin(spark):
 
 
 def test_planted_verdicts(spark):
-    from monocator_spark.queries.textops import (
-        dedup_newbatch_against_index,
-        minhash_band_index,
-    )
+    from monocator_spark.operators.band_index import band_index, dedup_against_index
+    from monocator_spark.queries.textops import MINHASH_KEYS, minhash_bands_of
 
     old_rows = [
         (1, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -159,7 +171,11 @@ def test_planted_verdicts(spark):
     new = spark.createDataFrame(new_rows, "doc_id long, text string")
     out = {
         r["doc_id"]: (r["verdict"], r["rep_id"])
-        for r in dedup_newbatch_against_index(new, minhash_band_index(old)).collect()
+        for r in dedup_against_index(
+            minhash_bands_of(new),
+            band_index(minhash_bands_of(old), MINHASH_KEYS),
+            MINHASH_KEYS,
+        ).collect()
     }
     assert out[10] == ("dup_existing", 1)
     assert out[11] == ("new", 11)
