@@ -343,7 +343,7 @@ def _broadcast_probe(
     """Probe via a scalar pandas UDF over the (shard, bucket, slot) tensor
     captured in the closure — vectorized, no shuffle (the small-filter
     fast path, mirroring dedup._broadcast_probe)."""
-    n_buckets, n_shards = cfg.cuckoo_buckets_per_shard, cfg.bloom_shards
+    n_buckets, n_shards = cfg.cuckoo_buckets_per_shard, spec.BLOOM_SHARDS
     mat = np.zeros((n_shards, n_buckets, SLOTS_PER_BUCKET), dtype=np.uint16)
     over = np.zeros(n_shards, dtype=bool)
     for r in shards:
@@ -378,7 +378,7 @@ def prefilter(
     if filt is None:
         return cands.withColumn("maybe_seen", F.lit(True))
 
-    total = cfg.bloom_shards * cfg.cuckoo_buckets_per_shard * SLOTS_PER_BUCKET * 2
+    total = spec.BLOOM_SHARDS * cfg.cuckoo_buckets_per_shard * SLOTS_PER_BUCKET * 2
     if total <= BROADCAST_PROBE_MAX_BYTES:
         return _broadcast_probe(cands, filt.collect(), cfg)
 

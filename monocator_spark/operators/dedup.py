@@ -45,7 +45,7 @@ BLOOM_SCHEMA = StructType(
 def shard_col(url_hash_col: str, cfg: spec.CrawlConfig) -> F.Column:
     # two's-complement & mask == pmod for power-of-two shard counts, and
     # matches Python's  h & (S-1)  on signed ints.
-    return F.expr(f"cast(({url_hash_col} & {cfg.bloom_shards - 1}) as int)")
+    return F.expr(f"cast(({url_hash_col} & {spec.BLOOM_SHARDS - 1}) as int)")
 
 
 def _positions(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
@@ -58,7 +58,7 @@ def _positions(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
 
 
 def bits_from_hashes(hashes: np.ndarray, cfg: spec.CrawlConfig) -> bytes:
-    m, k = cfg.bloom_bits_per_shard, cfg.bloom_num_hashes
+    m, k = cfg.bloom_bits_per_shard, spec.BLOOM_NUM_HASHES
     bits = np.zeros(m // 8, dtype=np.uint8)
     if hashes.size:
         pos = _positions(hashes, m, k).ravel()
@@ -68,7 +68,7 @@ def bits_from_hashes(hashes: np.ndarray, cfg: spec.CrawlConfig) -> bytes:
 
 def probe_hashes(hashes: np.ndarray, bits: bytes, cfg: spec.CrawlConfig) -> np.ndarray:
     """→ bool[n]: True = maybe seen (all k bits set)."""
-    m, k = cfg.bloom_bits_per_shard, cfg.bloom_num_hashes
+    m, k = cfg.bloom_bits_per_shard, spec.BLOOM_NUM_HASHES
     arr = np.frombuffer(bits, dtype=np.uint8)
     pos = _positions(hashes, m, k)
     got = (arr[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
@@ -126,7 +126,7 @@ def _broadcast_probe(cands: DataFrame, shards: list, cfg: spec.CrawlConfig) -> D
     the closure — vectorized 2D numpy indexing, no shuffle, no join."""
     from pyspark.sql.types import BooleanType
 
-    m, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_num_hashes, cfg.bloom_shards
+    m, k, n_shards = cfg.bloom_bits_per_shard, spec.BLOOM_NUM_HASHES, spec.BLOOM_SHARDS
     mat = np.zeros((n_shards, m // 8), dtype=np.uint8)
     for r in shards:
         mat[int(r["shard"])] = np.frombuffer(r["bits"], dtype=np.uint8)
@@ -152,7 +152,7 @@ def bloom_prefilter(cands: DataFrame, bloom: DataFrame | None, cfg: spec.CrawlCo
     if bloom is None:
         return cands.withColumn("maybe_seen", F.lit(True))
 
-    if cfg.bloom_shards * (cfg.bloom_bits_per_shard // 8) <= BROADCAST_PROBE_MAX_BYTES:
+    if spec.BLOOM_SHARDS * (cfg.bloom_bits_per_shard // 8) <= BROADCAST_PROBE_MAX_BYTES:
         return _broadcast_probe(cands, bloom.collect(), cfg)
 
     from pyspark.sql.types import BooleanType
@@ -240,7 +240,7 @@ def evict_filter(
         r["shard"]
         for r in gone.select(shard_col("url_hash", cfg).alias("shard"))
         .distinct()
-        .collect()  # O(shards) — bookkeeping, bounded by cfg.bloom_shards
+        .collect()  # O(shards) — bookkeeping, bounded by spec.BLOOM_SHARDS
     ]
     if not affected:
         return filt

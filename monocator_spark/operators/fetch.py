@@ -31,7 +31,7 @@ from monocator_spark.sim.simulator import INVALID, MISSING, OK, OVERSIZE
 
 
 def make_validate_udf(cfg: spec.CrawlConfig):
-    max_body, psnr_min = cfg.max_body_bytes, cfg.psnr_min_db
+    max_body, psnr_min = spec.MAX_BODY_BYTES, spec.PSNR_MIN_DB
 
     def validate(
         image_id: pd.Series,

@@ -25,9 +25,9 @@ _UNIT = "(CAST(xxhash64(concat('hostpick|', t_image_id)) AS DOUBLE) / CAST(18446
 def expand_outlinks(fetched_ok: DataFrame, cfg: spec.CrawlConfig) -> DataFrame:
     """fetched_ok(url_norm, depth) → raw candidate links (url, depth).
 
-    Only pages with depth < max_depth expand; k ∈ {0..3} links per page.
+    Only pages with depth < spec.MAX_DEPTH expand; k ∈ {0..3} links per page.
     """
-    base = fetched_ok.where(F.col("depth") < cfg.max_depth).select("url_norm", "depth")
+    base = fetched_ok.where(F.col("depth") < spec.MAX_DEPTH).select("url_norm", "depth")
     k = F.pmod(F.xxhash64(F.concat(F.lit(spec.OUTLINK_PREFIX), F.col("url_norm"))), F.lit(4))
     df = (
         base.withColumn("k", k)

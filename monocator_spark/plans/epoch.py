@@ -24,31 +24,14 @@ from dataclasses import dataclass, field
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    DoubleType, IntegerType, LongType, StringType, StructField, StructType,
-)
 
 from monocator_spark import spec
 from monocator_spark.operators import (
     dedup, enqueue, fetch, outlinks, politeness, scan,
 )
+from monocator_spark.operators.enqueue import FRONTIER_COLS_Q
 from monocator_spark.sim.simulator import MISSING, OK
-from monocator_spark.sources.store import SnapshotStore
-
-FRONTIER_SCHEMA = StructType(
-    [
-        StructField("url_norm", StringType()),
-        StructField("url_hash", LongType()),
-        StructField("host", StringType()),
-        StructField("priority", DoubleType()),
-        StructField("depth", IntegerType()),
-        StructField("retries", IntegerType()),
-        StructField("quota", IntegerType()),
-    ]
-)
-
-# frontier rows carry their (static) per-host quota from enqueue-time gating
-FRONTIER_COLS_Q = [*enqueue.FRONTIER_COLS, "quota"]
+from monocator_spark.sources.store import SnapshotStore, commit_next, next_epoch
 
 
 @dataclass
@@ -112,16 +95,14 @@ class CrawlEngine:
         seeds = self.spark.read.parquet(f"{self.world_dir}/seeds").withColumn(
             "depth", F.lit(0)
         )
-        cands = enqueue.dedup_within_batch(enqueue.prepare_candidates(seeds)).cache()
+        adm = enqueue.admit(seeds, None, None, self.host_state, self.cfg)
         # materialize the cache once so the concurrent writes below all
         # read it instead of racing to build it multiple times
-        cands.count()
-        admitted, denied = politeness.gate(cands, self.host_state, self.cfg)
-        seen = cands.select("url_hash", "url_norm")
-        bloom = dedup.merge_filter(
-            None, dedup.build_filter(cands.select("url_hash"), self.cfg), self.cfg
-        ).cache()  # small (n_shards rows); read by epoch 0 AND the tail write
-        frontier0 = admitted.select(*FRONTIER_COLS_Q)
+        adm.cands.count()
+        seen = adm.new.select("url_hash", "url_norm")
+        # small (n_shards rows); read by epoch 0 AND the tail write
+        bloom = adm.filt.cache()
+        frontier0, denied = adm.admitted, adm.denied
 
         # epoch 0 reads this state straight from the in-memory plans over
         # the cands cache — no parquet round trip on the critical path. The
@@ -130,7 +111,7 @@ class CrawlEngine:
         # state, so epoch 1's preview sees them; a kill before the tail
         # commits leaves no manifest → clean re-bootstrap on resume.
         self._boot_state = {"frontier": frontier0, "seen": seen, "bloom": bloom}
-        self._boot_persist = [cands, bloom]
+        self._boot_persist = [adm.cands, bloom]
 
         def tail() -> dict:
             writes = [
@@ -144,7 +125,7 @@ class CrawlEngine:
             with ThreadPoolExecutor(max_workers=len(writes)) as pool:
                 for fut in [pool.submit(w) for w in writes]:
                     fut.result()
-            self.store.commit(0, {"crawl_epoch": -1})
+            commit_next(self.store, {"crawl_epoch": -1})
             return {"idle": True}  # bookkeeping only — not a crawl epoch
 
         return tail
@@ -305,7 +286,7 @@ class CrawlEngine:
                     (F.col("status") != OK)
                     & ~(
                         (F.col("status") == MISSING)
-                        & (F.col("retries") < cfg.max_retries)
+                        & (F.col("retries") < spec.MAX_RETRIES)
                     )
                 ).cast("long")
             ).alias("n_failed_perm"),
@@ -341,7 +322,7 @@ class CrawlEngine:
         shot = change.with_screenshot(ok, hist, epoch, cfg)
         retry = (
             meta.where(
-                (F.col("status") == MISSING) & (F.col("retries") < cfg.max_retries)
+                (F.col("status") == MISSING) & (F.col("retries") < spec.MAX_RETRIES)
             )
             .select(
                 "url_norm", "url_hash", "host", "priority", "depth",
@@ -350,27 +331,23 @@ class CrawlEngine:
         )
         perm_failed = meta.where(
             (F.col("status") != OK)
-            & ~((F.col("status") == MISSING) & (F.col("retries") < cfg.max_retries))
+            & ~((F.col("status") == MISSING) & (F.col("retries") < spec.MAX_RETRIES))
         ).select("url_hash", "url_norm", "status", F.lit(epoch).alias("epoch"))
 
-        # outlink discovery → shared enqueue path → dedup vs seen → gate
-        new_entries = self.spark.createDataFrame(
-            [], FRONTIER_SCHEMA
-        ).drop("quota")
-        admitted = self.spark.createDataFrame([], FRONTIER_SCHEMA)
-        denied_new = None
-        lineage = None
+        # outlink discovery → the shared enqueue rule (dedup vs seen → gate)
+        admitted = new_entries = denied_new = lineage = None
+        bloom_next = bloom
         if cfg.follow_outlinks:
             raw_links = outlinks.expand_outlinks(ok.select("url_norm", "depth"), cfg)
             # cands is read twice (dedup + lineage tagging) and runs the
-            # canonicalizer UDF — cache so the Arrow pass happens once.
-            cands = enqueue.dedup_within_batch(enqueue.prepare_candidates(raw_links)).cache()
-            persisted.append(cands)
-            new_entries = dedup.filter_new(cands, seen, bloom, cfg).cache()
-            persisted.append(new_entries)
-            # gate ONCE at enqueue; the simulator's gate would deny these
-            # rows at its epoch+1 pass, so stamp them accordingly
-            admitted, denied_new = politeness.gate(new_entries, self.host_state, cfg)
+            # canonicalizer UDF — admit caches it so the Arrow pass happens
+            # once. The gate runs ONCE at enqueue; the simulator's gate
+            # would deny these rows at its epoch+1 pass, so _phase2 stamps
+            # them accordingly.
+            cands, new_entries, admitted, denied_new, bloom_next = enqueue.admit(
+                raw_links, seen, bloom, self.host_state, cfg
+            )
+            persisted += [cands, new_entries]
             # per-partition lineage: dedup hit rate by host bucket (O17)
             tagged = cands.join(
                 new_entries.select("url_hash", F.lit(1).alias("is_new")),
@@ -407,21 +384,14 @@ class CrawlEngine:
         # frontier host cardinality (O17 metric) rides the same count
         # action as another Observation — approx_count_distinct, no job
         frontier_obs = Observation(f"frontier-{epoch}")
-        next_frontier = remaining.unionByName(retry).unionByName(
-            admitted.select(*FRONTIER_COLS_Q)
-        ).observe(
+        next_frontier = remaining.unionByName(retry)
+        if admitted is not None:
+            next_frontier = next_frontier.unionByName(admitted)
+        next_frontier = next_frontier.observe(
             frontier_obs,
             F.approx_count_distinct("host", 0.02).alias("hosts_approx"),
         ).cache()
         persisted.append(next_frontier)
-
-        bloom_next = (
-            dedup.merge_filter(
-                bloom, dedup.build_filter(new_entries.select("url_hash"), cfg), cfg
-            )
-            if cfg.follow_outlinks
-            else bloom
-        )
 
         # Second (and last) materializing action: everything downstream of
         # the pinned meta cache (outlink dedup + gate + next-frontier) — the
@@ -576,11 +546,9 @@ class CrawlEngine:
             ),
             epoch + 1,
         )
-        # manifest id = store sequence, NOT crawl_epoch + 1: other writers
-        # (StreamingEnqueue between runs, reenqueue, evict_seen) may have
-        # consumed manifest numbers; crawl_epoch in meta is what resume reads
-        last = st.last_epoch()
-        st.commit((-1 if last is None else last) + 1, {"crawl_epoch": epoch})
+        # manifest id = store sequence, NOT crawl_epoch + 1 (commit_next);
+        # crawl_epoch in meta is what resume reads
+        commit_next(st, {"crawl_epoch": epoch})
         # after the metrics write: the table's schema carries no timing
         ctx["timing"]["flush_commit"] = round(time.monotonic() - t_flush, 2)
         m["timing"] = ctx["timing"]
@@ -589,6 +557,12 @@ class CrawlEngine:
         return m
 
     # -- forced recrawl (O14 driver) ---------------------------------------------
+    def _url_rows(self, urls: list[str]) -> DataFrame:
+        """urls → raw enqueue rows (url, depth 0)."""
+        return self.spark.createDataFrame(
+            [(u,) for u in urls], "url string"
+        ).withColumn("depth", F.lit(0))
+
     def reenqueue(self, urls: list[str]) -> None:
         """Put already-crawled URLs back into the frontier (forced recrawl).
 
@@ -598,21 +572,16 @@ class CrawlEngine:
         Caller contract: only pass URLs not currently pending (i.e. already
         fetched/failed), else they would be scheduled twice.
         """
-        from monocator_spark.operators import enqueue as enq
-
-        raw = self.spark.createDataFrame(
-            [(u,) for u in urls], "url string"
-        ).withColumn("depth", F.lit(0))
-        cands = enq.dedup_within_batch(enq.prepare_candidates(raw))
-        admitted, _denied = politeness.gate(cands, self.host_state, self.cfg)
+        adm = enqueue.admit(
+            self._url_rows(urls), None, None, self.host_state, self.cfg
+        )
         frontier = self.store.load(self.spark, "frontier")
-        nxt = admitted.select(*FRONTIER_COLS_Q)
+        nxt = adm.admitted
         if frontier is not None:
             nxt = frontier.unionByName(nxt)
-        ep = (self.store.last_epoch() or 0) + 1
-        meta = self.store.meta() or {"crawl_epoch": -1}
-        self.store.stage_overwrite("frontier", nxt, ep)
-        self.store.commit(ep, meta)  # crawl_epoch unchanged: run() resumes
+        self.store.stage_overwrite("frontier", nxt, next_epoch(self.store))
+        commit_next(self.store)  # crawl_epoch unchanged: run() resumes
+        adm.cands.unpersist()
 
     # -- TTL / refresh eviction (the dual of reenqueue) ----------------------------
     def evict_seen(self, urls: list[str]) -> int:
@@ -632,16 +601,7 @@ class CrawlEngine:
         unchanged, so a kill between evict and the next run() resumes
         exactly like reenqueue does.
         """
-        from monocator_spark.operators import enqueue as enq
-
-        raw = self.spark.createDataFrame(
-            [(u,) for u in urls], "url string"
-        ).withColumn("depth", F.lit(0))
-        keys = (
-            enq.dedup_within_batch(enq.prepare_candidates(raw))
-            .select("url_hash")
-            .cache()
-        )
+        keys = enqueue.candidates(self._url_rows(urls)).select("url_hash").cache()
         seen = self.store.load(self.spark, "seen")
         if seen is None:
             keys.unpersist()
@@ -656,12 +616,11 @@ class CrawlEngine:
         filt = dedup.evict_filter(
             self.store.load(self.spark, "bloom"), gone, remaining, self.cfg
         )
-        ep = (self.store.last_epoch() or 0) + 1
-        meta = self.store.meta() or {"crawl_epoch": -1}
+        ep = next_epoch(self.store)
         self.store.stage_overwrite("seen", remaining, ep)
         if filt is not None:
             self.store.stage_overwrite("bloom", filt, ep)
-        self.store.commit(ep, meta)
+        commit_next(self.store)
         keys.unpersist()
         gone.unpersist()
         return int(n_gone)
@@ -696,11 +655,7 @@ class CrawlEngine:
                 if ctx.get("idle"):
                     # nothing staged; commit just advances crawl_epoch so a
                     # kill during an idle streak still resumes exactly
-                    last = self.store.last_epoch()
-                    self.store.commit(
-                        (-1 if last is None else last) + 1,
-                        {"crawl_epoch": ctx["epoch"]},
-                    )
+                    commit_next(self.store, {"crawl_epoch": ctx["epoch"]})
                     return {"idle": True}
                 return self._phase2(ctx, ev)
             except BaseException:

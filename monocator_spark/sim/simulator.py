@@ -95,7 +95,7 @@ class ReferenceSimulator:
         row = self.corpus.get(image_id)
         if row is None:
             return MISSING, None
-        if len(row["bytes"]) > self.cfg.max_body_bytes:
+        if len(row["bytes"]) > spec.MAX_BODY_BYTES:
             return OVERSIZE, None
         try:
             px, fmt = decode(row["bytes"])
@@ -105,7 +105,7 @@ class ReferenceSimulator:
         if fmt == "png":
             if not np.array_equal(px, ref):
                 return INVALID, None
-        elif psnr_db(ref, px) < self.cfg.psnr_min_db:
+        elif psnr_db(ref, px) < spec.PSNR_MIN_DB:
             return INVALID, None
         if row["caption"] != dg.caption_of_image(image_id):
             return INVALID, None
@@ -293,10 +293,10 @@ class ReferenceSimulator:
                         "screenshot": shot,
                     })
                     del pending[e.url_hash]
-                    if self.cfg.follow_outlinks and e.depth < self.cfg.max_depth:
+                    if self.cfg.follow_outlinks and e.depth < spec.MAX_DEPTH:
                         for link in dg.outlinks_of(e.url_norm, self.cfg.n_images, self.cfg.n_hosts):
                             outlink_batch.append((link, e.depth + 1))
-                elif status == MISSING and e.retries < self.cfg.max_retries:
+                elif status == MISSING and e.retries < spec.MAX_RETRIES:
                     e.retries += 1  # stays pending → rescheduled next epoch
                 else:
                     n_failed += 1

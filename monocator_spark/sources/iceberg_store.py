@@ -193,11 +193,9 @@ class IcebergStore:
         Tables untouched this epoch inherit the previous epoch's pins, so
         every committed epoch row-set is a complete snapshot tuple.
 
-        Idempotent per epoch: committing the same epoch again (e.g.
-        ``reenqueue`` pins epoch N+1, then the resumed run's first flush
-        commits N+1 too — SnapshotStore's manifest rename REPLACES, so the
-        Iceberg twin must replace as well) first deletes that epoch's
-        existing pin rows. The delete and the append are two snapshots, not
+        Idempotent per epoch: committing the same epoch again
+        (SnapshotStore's manifest rename REPLACES, so the Iceberg twin must
+        replace as well) first deletes that epoch's existing pin rows. The delete and the append are two snapshots, not
         one transaction — a kill in the gap leaves the epoch absent, so
         resume falls back to the previous complete epoch: the same
         invisibility guarantee, never a mixed row-set."""

@@ -53,6 +53,33 @@ def _writer(df: DataFrame):
     return w
 
 
+# manifest meta every commit carries forward unless it sets them: resume
+# reads crawl_epoch (−1 = crawl not started), and a replayed stream batch
+# is checked against stream_batch_id
+CARRIED_META = ("crawl_epoch", "stream_batch_id")
+
+
+def next_epoch(store) -> int:
+    """The store's next manifest id: 0 on an empty store, else last + 1."""
+    last = store.last_epoch()
+    return 0 if last is None else last + 1
+
+
+def commit_next(store, meta: dict | None = None) -> int:
+    """Commit the staged writes as the store's next manifest id; → that id.
+
+    The id is the store's own sequence, not the crawl epoch: the crawl
+    loop, ``StreamingEnqueue``, ``reenqueue`` and ``evict_seen`` all
+    consume ids. ``meta`` is merged over the previous manifest's
+    ``CARRIED_META``. Uses only ``last_epoch``/``meta``/``commit``, so it
+    serves ``SnapshotStore`` and ``IcebergStore`` alike."""
+    ep = next_epoch(store)
+    prev = store.meta(ep - 1) if ep else {}
+    carried = {k: prev[k] for k in CARRIED_META if k in prev}
+    store.commit(ep, {"crawl_epoch": -1, **carried, **(meta or {})})
+    return ep
+
+
 class SnapshotStore:
     """Thread-safe: independent tables may be staged concurrently within an
     epoch (the epoch pipeline flushes them from a thread pool); the commit

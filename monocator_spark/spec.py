@@ -302,15 +302,9 @@ class CrawlConfig:
     n_hosts: int
     wave_size: int = WAVE_SIZE
     per_host_quota: int = PER_HOST_QUOTA
-    max_depth: int = MAX_DEPTH
-    max_retries: int = MAX_RETRIES
-    max_body_bytes: int = MAX_BODY_BYTES
-    psnr_min_db: float = PSNR_MIN_DB
-    bloom_shards: int = BLOOM_SHARDS
     bloom_bits_per_shard: int = BLOOM_BITS_PER_SHARD
-    bloom_num_hashes: int = BLOOM_NUM_HASHES
     # URL-seen pre-filter structure (north rule: "bloom/cuckoo URL-seen").
-    # Both share the sharding (url_hash & (bloom_shards-1)), the state-table
+    # Both share the sharding (url_hash & (BLOOM_SHARDS-1)), the state-table
     # slot, and the exact-confirm contract, so the crawl output is
     # byte-identical either way (tests/test_cuckoo.py). Bloom = fewer bits
     # per element at the 0.1% FP target and a trivial OR-merge; cuckoo =

@@ -142,7 +142,7 @@ class StreamingCorpusDedup:
         q.awaitTermination()
 
     def verdicts(self) -> DataFrame:
-        """All verdict rows so far, with the batch_id partition column."""
-        return self.spark.read.option("basePath", self.verdicts_dir).parquet(
-            f"{self.verdicts_dir}/batch_id=*"
-        )
+        """All verdict rows so far; partition discovery adds ``batch_id``.
+        The dir itself is read, not a ``batch_id=*`` glob, which Spark
+        would first probe as a streaming-sink metadata path."""
+        return self.spark.read.parquet(self.verdicts_dir)

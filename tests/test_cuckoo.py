@@ -127,7 +127,7 @@ def test_delete_then_probe(spark):
         CFG,
     ).collect()
     by_shard = {r["shard"]: r for r in after}
-    n_shards = CFG.bloom_shards
+    n_shards = spec.BLOOM_SHARDS
 
     def probe_all(hs: np.ndarray) -> np.ndarray:
         out = np.zeros(len(hs), dtype=bool)

@@ -20,6 +20,7 @@ import re
 import pytest
 
 from monocator_spark.sources.iceberg_store import IcebergStore
+from monocator_spark.sources.store import SnapshotStore, commit_next
 
 
 # -- the fake catalog ---------------------------------------------------------
@@ -299,17 +300,16 @@ def test_pin_carry_forward(fake):
 
 
 def test_recommit_same_epoch_is_idempotent(fake):
-    """The reenqueue→resume shape: epoch N+1 committed twice. The second
-    commit must REPLACE the first's pin rows (SnapshotStore's manifest
-    rename semantics), never leave duplicate (epoch, tbl) pins, and meta()
-    must resolve to the re-committed values."""
+    """Epoch N+1 committed twice. The second commit must REPLACE the
+    first's pin rows (SnapshotStore's manifest rename semantics), never
+    leave duplicate (epoch, tbl) pins, and meta() must resolve to the
+    re-committed values."""
     store = IcebergStore(fake)
     store.stage_overwrite("frontier", fake.range(10).toDF("x"), 0)
     store.commit(0, {"crawl_epoch": -1})
-    # reenqueue-style commit of epoch 1
     store.stage_overwrite("frontier", fake.range(6).toDF("x"), 1)
     store.commit(1, {"crawl_epoch": -1})
-    # resumed run's first flush commits epoch 1 AGAIN with new state
+    # epoch 1 committed AGAIN with new state
     store.stage_overwrite("frontier", fake.range(2).toDF("x"), 1)
     store.commit(1, {"crawl_epoch": 0})
     rows = fake.table(f"{store.ns}.__epochs").collect()
@@ -390,3 +390,32 @@ def test_reconcile_branches_explicit(fake):
     resumed.commit(1, {"crawl_epoch": 0})
     assert resumed.load(fake, "t").count() == 6  # 3 + 2 + 1, no resurrection
     assert resumed.load(fake, "u").count() == 4
+
+
+@pytest.mark.parametrize("kind", ["snapshot", "iceberg"])
+def test_commit_next_sequences_ids_and_carries_meta(fake, tmp_path, kind):
+    """``commit_next`` numbers manifests 0, 1, 2… from the store's own
+    sequence and carries ``crawl_epoch``/``stream_batch_id`` forward, on
+    both stores: resume and the stream's replay check read whichever
+    manifest is latest."""
+    import pyarrow as pa
+
+    store = SnapshotStore(str(tmp_path)) if kind == "snapshot" else IcebergStore(fake)
+    schema = pa.schema([("x", pa.int64())])
+
+    def commit(meta=None):
+        # an Iceberg epoch is its pin rows, so every commit pins a table
+        store.stage_append_local("t", [{"x": 1}], schema, 0)
+        return commit_next(store, meta)
+
+    assert commit() == 0
+    assert store.meta() == {"crawl_epoch": -1}
+    assert commit({"stream_batch_id": 0, "stream_new_urls": 5}) == 1
+    assert store.meta() == {
+        "crawl_epoch": -1, "stream_batch_id": 0, "stream_new_urls": 5,
+    }
+    assert commit({"crawl_epoch": 0}) == 2
+    assert store.meta() == {"crawl_epoch": 0, "stream_batch_id": 0}
+    assert commit() == 3
+    assert store.meta() == {"crawl_epoch": 0, "stream_batch_id": 0}
+    assert store.last_epoch() == 3

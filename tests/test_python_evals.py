@@ -3,7 +3,7 @@
 Each Python task pays a fixed start-up charge whatever its row count, so
 the crawl's Arrow passes are bounded twice over: the canonicalizer runs
 once per candidate row (one Python node in the ``prepare_candidates``
-plan), and the bucketed fetch + validate pass runs one task per slot, not
+plan, and still one in the outlink step's ``enqueue.admit`` plan), and the bucketed fetch + validate pass runs one task per slot, not
 one per corpus bucket. Output equality of the bucketed fetch is guarded by
 ``tests/test_bucketed_fetch.py::test_bucketed_equals_broadcast``.
 """
@@ -20,7 +20,7 @@ from monocator_spark.datagen.distributed import (
     CORPUS_BUCKETS, register_bucketed_corpus,
 )
 from monocator_spark.functions.urlnorm import canonicalize_udf
-from monocator_spark.operators import enqueue, fetch
+from monocator_spark.operators import dedup, enqueue, fetch
 from test_bucketed_fetch import N_HOSTS, N_IMAGES, world  # noqa: F401
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
@@ -46,6 +46,38 @@ def test_prepare_candidates_runs_one_python_eval(spark):
         ("http://h1.example/a/b", 0),
         ("http://h1.example/c", 1),
     ]
+
+
+def test_admit_outlink_plan_runs_the_canonicalizer_once(spark):
+    """The outlink step's enqueue: ``admit`` against a seen set and its
+    Bloom filter. The admitted rows read the cached candidates through the
+    pre-filter, the exact confirm and the politeness gate, and the plan
+    still holds one canonicalizer node."""
+    raw = spark.createDataFrame(URLS, "url string, depth int")
+    seen = spark.createDataFrame(
+        [("http://h1.example/c",)], "url_norm string"
+    ).select(F.xxhash64("url_norm").alias("url_hash"), "url_norm")
+    cfg = spec.CrawlConfig(n_images=10, n_hosts=1)
+    filt = dedup.merge_filter(
+        None, dedup.build_filter(seen.select("url_hash"), cfg), cfg
+    )
+    host_state = spark.createDataFrame(
+        [("h1.example", [], 8, False)],
+        "host string, robots_rules array<struct<path_prefix:string,"
+        "allow:boolean>>, budget_per_epoch int, blacklisted boolean",
+    )
+    adm = enqueue.admit(raw, seen, filt, host_state, cfg)
+    try:
+        plan = formatted_plan(adm.admitted)
+        assert plan.count("_canonicalize_batches(") == 1, plan
+        assert audit("admit", plan) == []
+        # the seen URL is confirmed and dropped; the other is admitted
+        assert [(r.url_norm, r.quota) for r in adm.admitted.collect()] == [
+            ("http://h1.example/a/b", 8)
+        ]
+    finally:
+        adm.cands.unpersist()
+        adm.new.unpersist()
 
 
 def test_audit_flags_a_pushed_down_udf_filter(spark):

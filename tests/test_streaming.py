@@ -205,6 +205,15 @@ def test_stream_enqueue_then_crawl_matches_batch(spark, tmp_root, stream_world, 
     assert order == g_order
     assert seen == g_seen
 
+    # the crawl's commits carry stream_batch_id forward: a replay after
+    # the crawl still finds every batch committed
+    manifests_after_crawl = store.last_epoch()
+    shutil.rmtree(f"{tmp_root}/enq-ckpt")
+    StreamingEnqueue(
+        spark, CFG, store, feed, f"{tmp_root}/enq-ckpt", host_state=host_state
+    ).run_available()
+    assert store.last_epoch() == manifests_after_crawl, "replay after crawl re-committed"
+
 
 # -- applyInPandasWithState: gap sessions ---------------------------------------
 
