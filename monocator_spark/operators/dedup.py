@@ -7,14 +7,13 @@ Design for 10^10 URLs:
   * Bloom shards are persistent crawl state (shard = url_hash & (S-1)),
     OR-merged once per epoch — associative/commutative, never
     read-modify-write inside an epoch (SURVEY.md §7 hard-parts).
-  * The Bloom answer is only a *pre-filter*: "definitely new" rows skip the
-    exact check entirely (no false negatives), "maybe seen" rows — the
-    dedup hits plus an ε of false positives — are confirmed by a left-anti
-    join against the exact `seen` table, hash-partitioned on url_hash. At a
-    90% dedup-hit crawl this sends ~10%·(1+ε) of candidates into the join
-    instead of 100%, and the crawl order stays *exactly* equal to the
-    reference simulator's (a raw Bloom would drop false-positive URLs and
-    diverge).
+  * The Bloom answer is only a *pre-filter*: "definitely new" rows can
+    never match the exact check (no false negatives), "maybe seen" rows —
+    the dedup hits plus an ε of false positives — are confirmed by a
+    left-anti join against the exact `seen` table, hash-partitioned on
+    url_hash, whose condition carries the Bloom answer. The crawl order
+    stays *exactly* equal to the reference simulator's (a raw Bloom would
+    drop false-positive URLs and diverge).
   * Probe/build/merge are grouped-map pandas UDFs over numpy bit ops —
     one Arrow batch per shard, zero per-row Python.
 
@@ -262,9 +261,13 @@ def filter_new(
 ) -> DataFrame:
     """Exact-semantics dedup with the approximate-filter fast path.
 
-    definitely-new rows bypass the seen-table join; maybe-seen rows are
-    anti-joined against `seen` (exact). Result = truly-new candidates.
-    ``bloom`` is the state of whichever structure cfg.seen_filter selects.
+    One left-anti join of the tagged candidates to `seen`, with
+    ``maybe_seen`` in the join condition: definitely-new rows never match a
+    seen row, maybe-seen rows are confirmed exactly. The probe runs once per
+    candidate, never over `seen` (a ``where(maybe_seen)`` before the join
+    lets Catalyst infer the probe onto `seen` through ``url_hash``).
+    Result = truly-new candidates. ``bloom`` is the state of whichever
+    structure cfg.seen_filter selects.
     """
     if seen is None:
         return cands
@@ -274,7 +277,8 @@ def filter_new(
         tagged = cuckoo.prefilter(cands, bloom, cfg)
     else:
         tagged = bloom_prefilter(cands, bloom, cfg)
-    fresh = tagged.where(~F.col("maybe_seen")).drop("maybe_seen")
-    suspect = tagged.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed = suspect.join(seen.select("url_hash"), "url_hash", "left_anti")
-    return fresh.unionByName(confirmed)
+    return tagged.join(
+        seen.select(F.col("url_hash").alias("seen_hash")),
+        (F.col("url_hash") == F.col("seen_hash")) & F.col("maybe_seen"),
+        "left_anti",
+    ).drop("maybe_seen")

@@ -4,6 +4,21 @@ Tuned for the sandbox (local[N], single JVM) but every knob is the one you'd
 set on a 1000-executor cluster: AQE on (runtime re-plan + skew-join),
 shuffle partitions ∝ cores, Arrow batch size bounded so binary image columns
 don't blow executor memory during pandas-UDF transfer.
+
+The driver JVM runs with ``-XX:TieredStopAtLevel=1`` (C1-only JIT): on
+the crawl and the query library, C2's compiler threads cost more CPU
+than its faster code saves (measured split at the conf line; a driver
+that lives ~20 minutes, like the test suite's, was slower on C1, see
+BENCH/C1_JIT.md). The code cache keeps its tiered size,
+``-XX:ReservedCodeCacheSize=240m``. It is set
+as ``spark.driver.defaultJavaOptions``, which Spark prepends to
+``spark.driver.extraJavaOptions``, so a caller's own
+``extraJavaOptions`` still applies (a later ``-XX:TieredStopAtLevel=4``
+there restores tiered C2). It is driver-only: in local[N] the driver is
+the executor, while the long-lived executors of a real cluster (or of
+``local-cluster``) keep tiered C2. Under ``spark-submit`` the driver JVM
+is up before ``get_spark`` runs, so the conf has no effect there; pass the
+same ``--conf spark.driver.defaultJavaOptions=...`` there.
 """
 
 from __future__ import annotations
@@ -60,6 +75,18 @@ def get_spark(
         # traverse the network, which is where this codec choice pays.
         .config("spark.io.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # C1-only JIT (module docstring). scripts/cpu_by_thread.py on one
+        # perfbench crawl_wide run (local[4], 4 vCPU): the JVM's 133 CPU-s
+        # held 73 s of C1/C2 CompilerThreads, 23 s of executor tasks, 18 s
+        # of driver/py4j threads and 6 s of GC; with C1 only the compiler
+        # threads fall to ~11 s and the task threads stay at ~21 s. C1-only
+        # also shrinks the code cache default from 240 MB to 48 MB; the
+        # 20-minute test-suite session filled it and the code-cache sweeper
+        # took 484 CPU-s, so the tiered size is kept
+        .config(
+            "spark.driver.defaultJavaOptions",
+            "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m",
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -1,15 +1,18 @@
 """At most one Python evaluation per row and per slot.
 
 Each Python task pays a fixed start-up charge whatever its row count, so
-the crawl's Arrow passes are bounded twice over: the canonicalizer runs
+the crawl's Arrow passes are bounded: the canonicalizer runs
 once per candidate row (one Python node in the ``prepare_candidates``
-plan, and still one in the outlink step's ``enqueue.admit`` plan), and the bucketed fetch + validate pass runs one task per slot, not
-one per corpus bucket. Output equality of the bucketed fetch is guarded by
+plan, and still one in the outlink step's ``enqueue.admit`` plan), the
+Bloom probe runs once per candidate and never over the ``seen`` table, and
+the bucketed fetch + validate pass runs one task per slot, not one per
+corpus bucket. Output equality of the bucketed fetch is guarded by
 ``tests/test_bucketed_fetch.py::test_bucketed_equals_broadcast``.
 """
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -48,15 +51,10 @@ def test_prepare_candidates_runs_one_python_eval(spark):
     ]
 
 
-def test_admit_outlink_plan_runs_the_canonicalizer_once(spark):
-    """The outlink step's enqueue: ``admit`` against a seen set and its
-    Bloom filter. The admitted rows read the cached candidates through the
-    pre-filter, the exact confirm and the politeness gate, and the plan
-    still holds one canonicalizer node."""
+def _admit(spark, seen):
+    """``enqueue.admit`` of URLS against ``seen(url_hash, url_norm)`` and
+    its Bloom filter, as the outlink step calls it."""
     raw = spark.createDataFrame(URLS, "url string, depth int")
-    seen = spark.createDataFrame(
-        [("http://h1.example/c",)], "url_norm string"
-    ).select(F.xxhash64("url_norm").alias("url_hash"), "url_norm")
     cfg = spec.CrawlConfig(n_images=10, n_hosts=1)
     filt = dedup.merge_filter(
         None, dedup.build_filter(seen.select("url_hash"), cfg), cfg
@@ -66,7 +64,36 @@ def test_admit_outlink_plan_runs_the_canonicalizer_once(spark):
         "host string, robots_rules array<struct<path_prefix:string,"
         "allow:boolean>>, budget_per_epoch int, blacklisted boolean",
     )
-    adm = enqueue.admit(raw, seen, filt, host_state, cfg)
+    return enqueue.admit(raw, seen, filt, host_state, cfg)
+
+
+def _seen(spark, urls):
+    return spark.createDataFrame([(u,) for u in urls], "url_norm string").select(
+        F.xxhash64("url_norm").alias("url_hash"), "url_norm"
+    )
+
+
+def _subtree(plan: str, node_id: str) -> list[str]:
+    """The lines below node ``(node_id)`` in a formatted plan's tree."""
+    tree = plan.split("\n\n")[0].splitlines()
+    indent = lambda line: len(line) - len(line.lstrip(" :+-"))  # noqa: E731
+    for i, line in enumerate(tree):
+        if line.endswith(f"({node_id})"):
+            below = []
+            for nxt in tree[i + 1:]:
+                if indent(nxt) <= indent(line):
+                    break
+                below.append(nxt)
+            return below
+    raise AssertionError(f"node ({node_id}) not in the plan tree")
+
+
+def test_admit_outlink_plan_runs_the_canonicalizer_once(spark):
+    """The outlink step's enqueue: ``admit`` against a seen set and its
+    Bloom filter. The admitted rows read the cached candidates through the
+    pre-filter, the exact confirm and the politeness gate, and the plan
+    still holds one canonicalizer node."""
+    adm = _admit(spark, _seen(spark, ["http://h1.example/c"]))
     try:
         plan = formatted_plan(adm.admitted)
         assert plan.count("_canonicalize_batches(") == 1, plan
@@ -75,6 +102,32 @@ def test_admit_outlink_plan_runs_the_canonicalizer_once(spark):
         assert [(r.url_norm, r.quota) for r in adm.admitted.collect()] == [
             ("http://h1.example/a/b", 8)
         ]
+    finally:
+        adm.cands.unpersist()
+        adm.new.unpersist()
+
+
+def test_filter_new_probes_each_candidate_once_and_never_seen(spark, tmp_root):
+    """The Bloom probe runs in one Python node, over the candidates: none
+    over the `seen` table's scan. Its rows are the plain anti-join."""
+    path = f"{tmp_root}/python_evals_seen"
+    _seen(spark, ["http://h1.example/c", "http://h2.example/x"]).write.mode(
+        "overwrite"
+    ).parquet(path)
+    seen = spark.read.parquet(path)
+    adm = _admit(spark, seen)
+    try:
+        plan = formatted_plan(adm.new)
+        probes = re.findall(
+            r"^\((\d+)\) ArrowEvalPython\nInput .*\nArguments: \[probe\(",
+            plan, re.M,
+        )
+        assert len(probes) == 1, plan
+        assert plan.split("\n\n")[0].count("Scan parquet") == 1, plan
+        assert not any("Scan parquet" in ln for ln in _subtree(plan, probes[0])), plan
+        want = adm.cands.join(seen, "url_hash", "left_anti").select(*adm.new.columns)
+        assert sorted(adm.new.collect()) == sorted(want.collect())
+        assert [r.url_norm for r in adm.new.collect()] == ["http://h1.example/a/b"]
     finally:
         adm.cands.unpersist()
         adm.new.unpersist()
