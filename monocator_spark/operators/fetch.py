@@ -5,12 +5,14 @@ Reference analogues: `PageFetcher` max-body enforcement
 (/root/reference/src/mock-servers.MD:16-20), erroring page → recorded not
 fatal (/root/reference/src/mock-servers.MD:22).
 
-"Fetch" is seed-list replay against the corpus table (BASELINE.json:2): an
-equi-join of the wave on image_id. The wave is bounded (≤ wave_size rows)
-while the corpus is the 100 TB side, so the wave is broadcast — the corpus
-is never shuffled and its `bytes` column is only read for joined rows
-(parquet row-group pruning via the broadcast hash join's dynamic filter at
-scale; never project `bytes` before the wave cut, SURVEY.md §7).
+"Fetch" is seed-list replay against the corpus table (BASELINE.json:2): one
+LEFT join of the wave to the corpus on image_id, whatever the corpus
+layout. What keeps the 100 TB corpus from being shuffled is the bucketed
+layout (``datagen.distributed.register_bucketed_corpus``): the corpus is
+bucketed and sorted on image_id at ingest, so only the bounded wave moves.
+A plain-parquet corpus (unit worlds) is joined however Spark plans it —
+broadcast when it is small. Never project `bytes` before the wave cut
+(SURVEY.md §7).
 
 Validation (status 200/404/413/422) runs as ONE grouped Arrow-batched
 pandas UDF over (bytes, dims, caption, phash) — per-row numpy decode inside
@@ -70,72 +72,24 @@ def make_validate_udf(cfg: spec.CrawlConfig):
     return F.pandas_udf(validate, IntegerType())
 
 
-def fetch_wave(
-    wave: DataFrame, corpus: DataFrame, cfg: spec.CrawlConfig
-) -> DataFrame:
-    """wave ⟕ corpus on image_id + validation status column.
-
-    An outer join can't broadcast its preserved side, so the left join is
-    decomposed around two corpus reads that are each as cheap as possible:
-
-    * hits — INNER join with the bounded wave broadcast; the 100 TB corpus
-      is never shuffled, and this payload-bearing scan is consumed exactly
-      once (by the caller's persist of the validated result), so the
-      ``bytes`` column never sits in an extra cache tier.
-    * misses (404s) — LEFT ANTI join of the wave against the hit keys.
-      Column pruning cuts the hit-key subplan to the corpus key column only
-      (parquet reads ~0.1% of the table; never the payload), and the
-      resulting broadcast is ≤ wave_size rows — nothing scales with the
-      corpus. (Deliberately NOT persisted: caching the hit rows would
-      force a full-width 'bytes' materialization that defeats pruning.)
-
-    Validation (the decode/PSNR/caption pandas UDF) runs only on hit rows;
-    misses are MISSING by construction and never cross the Arrow boundary.
-
-    Both wave-bounded join sides (the wave itself and the hit-key set) are
-    broadcast only below hints.WAVE_BROADCAST_MAX; above it the joins fall
-    back to shuffle joins (the bucketed layout, ``fetch_wave_bucketed``, is
-    the intended at-scale path — this fallback keeps the generic path
-    correct rather than OOMing the driver on a 10^8-row wave).
-    """
-    from monocator_spark.operators.hints import wave_side
-
-    keyed = wave.withColumn("image_id", F.substring_index("url_norm", "/", -1))
-    bkeyed = wave_side(keyed, cfg)
-    hit = corpus.join(bkeyed, "image_id", "inner")
-    miss = keyed.join(
-        wave_side(hit.select("image_id"), cfg), "image_id", "left_anti"
-    ).select(
-        "image_id",
-        F.lit(None).cast("binary").alias("bytes"),
-        F.lit(None).cast("int").alias("w"),
-        F.lit(None).cast("int").alias("h"),
-        F.lit(None).cast("string").alias("fmt"),
-        F.lit(None).cast("string").alias("caption"),
-        F.lit(None).cast("long").alias("phash"),
-        *[c for c in keyed.columns if c != "image_id"],
-    )
-    validate_udf = make_validate_udf(cfg)
-    validated_hit = hit.withColumn(
-        "status",
-        validate_udf("image_id", "bytes", "w", "h", "caption", "phash"),
-    )
-    return validated_hit.unionByName(
-        miss.withColumn("status", F.lit(MISSING).cast("int"))
-    )
-
-
 def fetch_wave_bucketed(
     wave: DataFrame, corpus_tbl: DataFrame, cfg: spec.CrawlConfig
 ) -> DataFrame:
-    """Fetch against a bucketed+sorted corpus table — the at-scale layout.
+    """wave ⟕ corpus on image_id + validation status column.
 
-    One LEFT OUTER sort-merge join: the corpus side needs neither shuffle
-    nor sort (bucketed + sortBy(image_id) at write), only the bounded wave
-    is shuffled into the corpus's bucketing. No driver-side broadcast build
-    at all — every byte of epoch-critical-path work is executor-parallel.
-    Misses surface as null corpus columns; the validation UDF maps a null
-    payload to MISSING, so hit/miss needs no second join.
+    The one fetch, for either corpus layout. Against the bucketed+sorted
+    corpus table (the at-scale layout) it is one sort-merge join whose
+    corpus side needs neither shuffle nor sort: only the bounded wave is
+    shuffled into the corpus's bucketing, with no driver-side broadcast
+    build. Misses surface as null corpus columns; the validation UDF maps a
+    null payload to MISSING, so hit/miss needs no second join.
+
+    The validate UDF sees ``phash`` coalesced to 0. A miss row's null
+    ``phash`` would otherwise turn that column of its whole Arrow batch
+    into pandas float64, which cannot hold a 64-bit hash exactly, and the
+    batch's valid images would fail the phash check (422). A miss is still
+    MISSING: its null ``bytes`` is checked first. The ``phash`` column
+    itself stays null for misses.
 
     The join keeps the corpus's bucket count (64 in the bench worlds) as
     its partition count; the joined rows are coalesced (no shuffle) to the
@@ -155,5 +109,8 @@ def fetch_wave_bucketed(
     validate_udf = make_validate_udf(cfg)
     return joined.withColumn(
         "status",
-        validate_udf("image_id", "bytes", "w", "h", "caption", "phash"),
+        validate_udf(
+            "image_id", "bytes", "w", "h", "caption",
+            F.coalesce("phash", F.lit(0).cast("long")),
+        ),
     )

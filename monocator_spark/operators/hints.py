@@ -2,8 +2,10 @@
 
 Several epoch joins build their hash side from a WAVE-BOUNDED key set
 (≤ cfg.wave_size rows): the next-frontier anti-join (plans/epoch.py), the
-fetch hit/miss split (operators/fetch.py), the change-detection history
-prune (operators/change.py) and the scan-cache probe (operators/scan.py).
+change-detection history prune (operators/change.py) and the scan-cache
+probe (operators/scan.py). The fetch (operators/fetch.py) does not use
+this switch: it is one left join to the corpus, which the bucketed layout
+keeps from shuffling.
 At bench scale those sides are a few MB of longs and a driver broadcast is
 the right plan; at 10^10-frontier scale an epoch wave is 10^8–10^9 keys —
 past Spark's 8 GB broadcast ceiling and the driver's memory — so the

@@ -15,6 +15,8 @@ host-key skew").
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from monocator_spark import spec
@@ -61,13 +63,6 @@ def gate(pending: DataFrame, host_state: DataFrame, cfg: spec.CrawlConfig) -> tu
     return schedulable, denied
 
 
-# Waves larger than this use the range-partitioned distributed rank; below
-# it the single-partition window is cheaper (and is what the unit fixtures
-# exercise). Both paths produce identical rows — pinned by
-# tests/test_wave_paths.py.
-DISTRIBUTED_RANK_MIN_WAVE = 20_000
-
-
 def select_wave(
     schedulable: DataFrame, cfg: spec.CrawlConfig, persisted: list | None = None
 ) -> DataFrame:
@@ -76,9 +71,9 @@ def select_wave(
     Phase 1 ranks within (host, salt) — any row in a host's true top-q is in
     the top-q of its salt bucket, so the pre-filter is lossless while
     splitting a hot host across ``salt_per_host`` partitions. Phase 2 ranks
-    the ≤ salt_per_host×quota survivors per host exactly. The global sort
-    feeds ``limit(wave_size)``; wave_pos is a single-partition window over
-    at most wave_size rows (bounded by construction, so no scale concern).
+    the ≤ salt_per_host×quota survivors per host exactly. The global cap and
+    ``wave_pos`` come from ``_ranked_distributed`` at every wave size: one
+    JVM-side window rank, no single-partition sort and no Python pass.
     """
     order = [F.col("priority").desc(), F.col("url_hash").asc()]
     salted = schedulable.withColumn(
@@ -96,14 +91,7 @@ def select_wave(
         .where(F.col("rn2") <= F.col("quota"))
         .drop("rn2")  # quota is kept: it is frontier state (re-enqueued on retry)
     )
-    if cfg.wave_size >= DISTRIBUTED_RANK_MIN_WAVE:
-        return _ranked_distributed(quota_rows, cfg.wave_size, persisted)
-    wave = quota_rows.orderBy(*order).limit(cfg.wave_size)
-    # long, matching _ranked_distributed — one wave_pos type in every
-    # parquet file regardless of which path a given config takes
-    return wave.withColumn(
-        "wave_pos", (F.row_number().over(Window.orderBy(*order)) - 1).cast("long")
-    )
+    return _ranked_distributed(quota_rows, cfg.wave_size, persisted)
 
 
 def _ranked_distributed(
@@ -112,23 +100,22 @@ def _ranked_distributed(
     """Global rank + cap without a single-partition sort or a sampling pass.
 
     ``orderBy().limit(n)`` for a large n falls back to a total sort whose
-    global-limit (and the wave_pos window after it) funnels every row
+    global-limit (and a wave_pos window after it) funnels every row
     through one partition; ``repartitionByRange`` would fix that but pays a
     sampling job that re-executes the upstream quota windows. Neither is
     needed: priority is uniform in [0,1) BY CONSTRUCTION (spec.PRIORITY_SQL
     maps xxhash64 onto the unit interval), so range boundaries are
     analytic — bucket k holds priorities in ((1-(k+1)/B), (1-k/B)], i.e.
     descending priority = ascending bucket. Rows are hash-repartitioned on
-    the bucket, sorted within partitions by (bucket, priority DESC,
-    url_hash), and assigned
-    ``wave_pos = bucket_offset + index-within-bucket`` via ``mapInPandas``;
-    bucket offsets come from one tiny count job over the cached shuffle.
-    Exact, total, and independent of partition count → byte-identical
+    the bucket and sorted within partitions by (bucket, priority DESC,
+    url_hash); bucket offsets come from one tiny count job over that
+    (cached) shuffle. Then ``wave_pos = bucket_offset + index-within-bucket``
+    is a ``row_number`` window partitioned by the bucket, with the offset
+    looked up in a literal array: the window reads ``part`` as it is
+    partitioned and sorted (no further Exchange or Sort) and stays in the
+    JVM. Exact, total, and independent of partition count → byte-identical
     waves at every parallelism level (BENCH gate).
     """
-    import numpy as np
-    from pyspark.sql.types import LongType, StructField, StructType
-
     spark = quota_rows.sparkSession
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_buckets = parts * 4  # a few buckets per partition smooths hash placement
@@ -136,50 +123,25 @@ def _ranked_distributed(
         F.lit(n_buckets - 1),
         F.floor((F.lit(1.0) - F.col("priority")) * n_buckets),
     ).cast("int")
+    order = [F.col("priority").desc(), F.col("url_hash").asc()]
     part = quota_rows.withColumn("_bkt", bucket).repartition(
         parts, F.col("_bkt")
-    ).sortWithinPartitions(
-        F.col("_bkt").asc(), F.col("priority").desc(), F.col("url_hash").asc()
-    )
+    ).sortWithinPartitions(F.col("_bkt").asc(), *order)
     if persisted is not None:
         # cache only when the caller owns the lifecycle (the epoch pipeline):
         # an unconditional cache would leak one DataFrame per ad-hoc call.
-        # Without the cache the counts job and the mapInPandas pass each
-        # recompute `part` — deterministic, so the output is identical.
+        # Without the cache the counts job and the rank each recompute
+        # `part` — deterministic, so the output is identical.
         part = part.cache()
         persisted.append(part)
-    counts = part.groupBy("_bkt").count().collect()
-    offsets = np.zeros(n_buckets + 1, dtype=np.int64)
-    for r in counts:
-        offsets[r["_bkt"] + 1] = r["count"]
-    offsets_list = np.cumsum(offsets).tolist()
-
-    # fresh StructType — StructType.add would mutate the DataFrame's own
-    # cached schema object and corrupt self.columns
-    out_schema = StructType(
-        [f for f in part.schema.fields if f.name != "_bkt"]
-        + [StructField("wave_pos", LongType())]
+    sizes = dict(part.groupBy("_bkt").count().collect())
+    offsets = [0, *accumulate(sizes.get(b, 0) for b in range(n_buckets - 1))]
+    offset = F.element_at(
+        F.lit(offsets).cast("array<bigint>"), F.col("_bkt") + 1
     )
-    cols = [f.name for f in out_schema.fields]
-
-    def assign(it):
-        done: dict[int, int] = {}
-        for pdf in it:
-            if not len(pdf):
-                continue
-            pdf = pdf.copy()
-            pos = np.empty(len(pdf), dtype=np.int64)
-            bk = pdf["_bkt"].to_numpy()
-            # batches arrive sorted by (_bkt, priority desc, hash): number
-            # each bucket's rows consecutively from its global offset
-            for b in np.unique(bk):
-                mask = bk == b
-                start = offsets_list[int(b)] + done.get(int(b), 0)
-                cnt = int(mask.sum())
-                pos[mask] = np.arange(start, start + cnt, dtype=np.int64)
-                done[int(b)] = done.get(int(b), 0) + cnt
-            pdf["wave_pos"] = pos
-            yield pdf[cols]
-
-    ranked = part.mapInPandas(assign, out_schema)
-    return ranked.where(F.col("wave_pos") < wave_size)
+    rank = F.row_number().over(Window.partitionBy("_bkt").orderBy(*order))
+    return (
+        part.withColumn("wave_pos", (offset + rank - 1).cast("long"))
+        .drop("_bkt")
+        .where(F.col("wave_pos") < wave_size)
+    )

@@ -31,7 +31,9 @@ from monocator_spark.operators import (
 )
 from monocator_spark.operators.enqueue import FRONTIER_COLS_Q
 from monocator_spark.sim.simulator import MISSING, OK
-from monocator_spark.sources.store import SnapshotStore, commit_next, next_epoch
+from monocator_spark.sources.store import (
+    SnapshotStore, commit_next, hadoop_path, next_epoch,
+)
 
 
 @dataclass
@@ -57,11 +59,11 @@ class CrawlEngine:
         self.world_dir = world_dir
         self.cfg = cfg
         # prefer the bucketed corpus layout when the world provides it: the
-        # fetch join then shuffles only the wave (see fetch_wave_bucketed)
-        import os
-
-        self.corpus_bucketed = os.path.isdir(f"{world_dir}/corpus_bucketed")
-        if self.corpus_bucketed:
+        # fetch join then shuffles only the wave (see fetch_wave_bucketed).
+        # Probed through the Hadoop FileSystem, so any world URI Spark
+        # reads works (file://, hdfs://)
+        fs, bucketed = hadoop_path(spark, f"{world_dir}/corpus_bucketed")
+        if fs.isDirectory(bucketed):
             from monocator_spark.datagen.distributed import register_bucketed_corpus
 
             self.corpus = spark.table(register_bucketed_corpus(spark, world_dir))
@@ -256,10 +258,7 @@ class CrawlEngine:
 
         t0 = time.monotonic()
         wave_cols = wave.select(*FRONTIER_COLS_Q, "wave_pos")
-        if self.corpus_bucketed:
-            fetched = fetch.fetch_wave_bucketed(wave_cols, self.corpus, cfg)
-        else:
-            fetched = fetch.fetch_wave(wave_cols, self.corpus, cfg)
+        fetched = fetch.fetch_wave_bucketed(wave_cols, self.corpus, cfg)
         # status tallies ride the epoch's one materializing action as an
         # Observation — no separate groupBy-count job per epoch
         from pyspark.sql import Observation
@@ -375,7 +374,7 @@ class CrawlEngine:
         # next frontier: pending minus this wave, plus retries, plus admitted.
         # The wave-key side broadcasts only below hints.WAVE_BROADCAST_MAX —
         # a 10^8-row wave at full scale takes the shuffle anti-join instead
-        # (operators/hints.wave_side, same switch as the fetch/change joins).
+        # (operators/hints.wave_side, same switch as the change/scan joins).
         from monocator_spark.operators.hints import wave_side
 
         remaining = pending.select(*FRONTIER_COLS_Q).join(

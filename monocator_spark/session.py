@@ -17,8 +17,12 @@ as ``spark.driver.defaultJavaOptions``, which Spark prepends to
 there restores tiered C2). It is driver-only: in local[N] the driver is
 the executor, while the long-lived executors of a real cluster (or of
 ``local-cluster``) keep tiered C2. Under ``spark-submit`` the driver JVM
-is up before ``get_spark`` runs, so the conf has no effect there; pass the
-same ``--conf spark.driver.defaultJavaOptions=...`` there.
+is up before ``get_spark`` runs, so the conf has no effect there; pass
+``--driver-memory DRIVER_MEMORY`` and ``--conf
+spark.driver.defaultJavaOptions=DRIVER_JAVA_OPTIONS`` on the
+``spark-submit`` line (``scripts/probe_submit.py`` does). There
+``get_spark`` also leaves the master ``spark-submit`` was given alone; the
+session settings (AQE, the Arrow batch bound, zstd, UTC) still apply.
 """
 
 from __future__ import annotations
@@ -26,6 +30,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the driver JVM's heap and JIT options (module docstring)
+DRIVER_MEMORY = "8g"
+DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 
 
 def get_spark(
@@ -44,8 +52,7 @@ def get_spark(
     master_tpl = os.environ.get("MONO_SPARK_MASTER", "")
     master = master_tpl.format(cores=cores) if master_tpl else f"local[{cores}]"
     b = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # NOTE: the scaling bench (scripts/run_scaling.py) deliberately
         # DISABLES AQE for its counterbalanced pairings — runtime
@@ -74,7 +81,7 @@ def get_spark(
         # deterministic effect: on a multi-executor cluster shuffle bytes
         # traverse the network, which is where this codec choice pays.
         .config("spark.io.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", DRIVER_MEMORY))
         # C1-only JIT (module docstring). scripts/cpu_by_thread.py on one
         # perfbench crawl_wide run (local[4], 4 vCPU): the JVM's 133 CPU-s
         # held 73 s of C1/C2 CompilerThreads, 23 s of executor tasks, 18 s
@@ -83,13 +90,15 @@ def get_spark(
         # also shrinks the code cache default from 240 MB to 48 MB; the
         # 20-minute test-suite session filled it and the code-cache sweeper
         # took 484 CPU-s, so the tiered size is kept
-        .config(
-            "spark.driver.defaultJavaOptions",
-            "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m",
-        )
+        .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    # with the gateway port in the environment (spark-submit launched this
+    # process) pyspark joins the running driver JVM, whose master is the
+    # one it was submitted with
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        b = b.master(master)
     # ad-hoc conf overrides for experiments: "k=v;k=v"
     for kv in filter(None, os.environ.get("MONO_SPARK_CONF", "").split(";")):
         k, _, v = kv.partition("=")

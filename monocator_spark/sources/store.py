@@ -38,6 +38,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
+def hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` under the session's Hadoop conf, so a
+    driver-side listing or probe sees what the executors' reads see
+    (file://, hdfs://, s3a://)."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
+
+
 def _writer(df: DataFrame):
     """Parquet writer with per-table codec choice: tables carrying a binary
     payload column (fetched bytes, bloom shard bits) skip the snappy pass —

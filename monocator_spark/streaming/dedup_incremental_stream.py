@@ -45,6 +45,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from monocator_spark.operators.band_index import band_index, dedup_against_index
 from monocator_spark.queries.textops import MINHASH_KEYS, minhash_bands_of
+from monocator_spark.sources.store import hadoop_path
 
 DOC_SCHEMA = StructType(
     [
@@ -74,17 +75,11 @@ class StreamingCorpusDedup:
         self.checkpoint_dir = checkpoint_dir
 
     # -- state -----------------------------------------------------------
-    def _hadoop_path(self, path: str):
-        """(FileSystem, Path) of ``path`` under the session's Hadoop conf."""
-        sc = self.spark.sparkContext
-        p = sc._jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
-
     def _index_dirs(self, before: int | None = None) -> list[str]:
         """The ``batch_id=N`` index dirs, listed through the Hadoop
         FileSystem of ``index_dir`` (any scheme Spark reads: file://, hdfs://,
         s3a://), so the listing sees what the executors' reads see."""
-        fs, pattern = self._hadoop_path(f"{self.index_dir}/batch_id=*")
+        fs, pattern = hadoop_path(self.spark, f"{self.index_dir}/batch_id=*")
         dirs = []
         for st in fs.globStatus(pattern) or []:
             bid = int(st.getPath().getName().rsplit("=", 1)[1])
@@ -136,7 +131,7 @@ class StreamingCorpusDedup:
         """Drain everything currently in the feed dir, one batch per file,
         then stop. Re-invoking after new files arrive resumes from the
         checkpoint; re-invoking with nothing new is a no-op."""
-        fs, feed = self._hadoop_path(self.feed_dir)
+        fs, feed = hadoop_path(self.spark, self.feed_dir)
         fs.mkdirs(feed)
         q = self._stream().start()
         q.awaitTermination()

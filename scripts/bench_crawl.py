@@ -13,9 +13,10 @@ over the URL-seen set. Identical checksums across parallelism levels ⇒
 identical crawl order and seen set.
 
 Also usable under spark-submit for cluster packaging (north_rule:
-"spark-submit --py-files"):
+"spark-submit --py-files"); the submitted master is kept, and ``--cores``
+then sets only the default shuffle partitions:
     spark-submit --py-files dist/monocator_spark.zip \
-        scripts/bench_crawl.py --cluster --world ... --out ...
+        scripts/bench_crawl.py --world ... --out ...
 """
 
 from __future__ import annotations
@@ -54,11 +55,6 @@ def main() -> None:
     ap.add_argument("--warmup", action="store_true", help="untimed warmup epoch first")
     ap.add_argument("--keep-store", action="store_true", help="keep the crawl store on disk after the run")
     ap.add_argument("--out", default=None, help="write JSON here as well as stdout")
-    ap.add_argument(
-        "--cluster",
-        action="store_true",
-        help="don't set master/cores in-process; inherit from spark-submit",
-    )
     # O8/O12/O13 + O14 cost measurement: neither flag alters the schedule,
     # so the order/seen checksums must equal the lean run's — the delta is
     # the features' pure cost. --time-politeness is different: it SPREADS
@@ -84,22 +80,15 @@ def main() -> None:
 
     from monocator_spark import spec
     from monocator_spark.plans.epoch import CrawlEngine
+    from monocator_spark.session import get_spark
     from monocator_spark.sources.store import SnapshotStore
 
-    if args.cluster:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.builder.appName("bench-crawl").getOrCreate()
-        cores = spark.sparkContext.defaultParallelism
-    else:
-        from monocator_spark.session import get_spark
-
-        cores = args.cores
-        spark = get_spark(
-            "bench-crawl",
-            cores=cores,
-            shuffle_partitions=args.shuffle_partitions or cores,
-        )
+    cores = args.cores
+    spark = get_spark(
+        "bench-crawl",
+        cores=cores,
+        shuffle_partitions=args.shuffle_partitions or cores,
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     store_dir = args.store or f"/tmp/mono_bench_store_c{cores}"

@@ -7,9 +7,13 @@ already holds committed epochs, the run continues from the last manifest
 checkpoint"). Kill it at any point; rerunning with the same arguments
 completes the crawl with byte-identical outputs.
 
-Cluster:
-    spark-submit --py-files dist/monocator_spark.zip scripts/crawl_job.py \
-        --world <path> --store <path> [--max-epochs K]
+Cluster (``monocator_spark.session.DRIVER_MEMORY`` and
+``DRIVER_JAVA_OPTIONS`` go on the submit line; the session settings and
+the submitted master come through ``get_spark``):
+    spark-submit --py-files dist/monocator_spark.zip \
+        --driver-memory <DRIVER_MEMORY> \
+        --conf spark.driver.defaultJavaOptions=<DRIVER_JAVA_OPTIONS> \
+        scripts/crawl_job.py --world <path> --store <path> [--max-epochs K]
 Local:
     python scripts/crawl_job.py --world <path> --store <path> --cores 16
 """
@@ -32,7 +36,11 @@ def main() -> None:
     ap.add_argument("--max-epochs", type=int, default=1000)
     ap.add_argument("--wave-size", type=int, default=None)
     ap.add_argument("--per-host-quota", type=int, default=None)
-    ap.add_argument("--cores", type=int, default=None, help="local mode only")
+    ap.add_argument(
+        "--cores", type=int, default=None,
+        help="local[N] cores; under spark-submit the submitted master is"
+        " kept and this sets only the shuffle partitions",
+    )
     ap.add_argument(
         "--reenqueue", default=None, metavar="FILE",
         help="ops hook: file of URLs (one per line) to force-refetch before"
@@ -49,16 +57,10 @@ def main() -> None:
 
     from monocator_spark import spec
     from monocator_spark.plans.epoch import CrawlEngine
+    from monocator_spark.session import get_spark
     from monocator_spark.sources.store import SnapshotStore
 
-    if args.cores:
-        from monocator_spark.session import get_spark
-
-        spark = get_spark("crawl-job", cores=args.cores, shuffle_partitions=args.cores)
-    else:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.builder.appName("crawl-job").getOrCreate()
+    spark = get_spark("crawl-job", cores=args.cores, shuffle_partitions=args.cores)
     spark.sparkContext.setLogLevel("WARN")
 
     with open(os.path.join(args.world, "_WORLD_META.json")) as f:

@@ -8,7 +8,7 @@ Produces ``dist/monocator_spark.zip`` containing the package source only
     python scripts/make_pyfiles_zip.py
     spark-submit --master <cluster> \
         --py-files dist/monocator_spark.zip \
-        scripts/bench_crawl.py --cluster --world <shared-path> --out out.json
+        scripts/bench_crawl.py --world <shared-path> --out out.json
 
 ``scripts/crawl_job.py`` is the production entry (arbitrary world/store
 paths, resume supported); ``bench_crawl.py`` is the measured variant.

@@ -8,6 +8,13 @@ with ``spark-submit --py-files dist/monocator_spark.zip`` on a toy world.
 Every import must then resolve from the zip — exactly what executors on a
 real cluster do. Asserts the job completes, then re-submits with the same
 store and asserts the resume is a no-op (already-complete crawl).
+
+The submit line carries the driver's heap and JVM options from
+``session.DRIVER_MEMORY`` / ``session.DRIVER_JAVA_OPTIONS`` (the driver
+JVM is up before ``get_spark`` runs). A third submit, with the same line,
+runs ``get_spark`` and asserts that the driver JVM got them, that the
+session kept the submitted master and that it carries ``get_spark``'s
+Arrow batch bound.
 """
 
 from __future__ import annotations
@@ -22,9 +29,25 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+# submitted like the crawl job: what get_spark gives a submitted driver
+DRIVER_PROBE = """
+import json
+from monocator_spark.session import get_spark
+s = get_spark("submit-probe-driver")
+jvm = s.sparkContext._jvm
+mx = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+print(json.dumps({
+    "master": s.sparkContext.master,
+    "jvm_args": list(mx.getInputArguments()),
+    "arrow_batch": s.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"),
+}))
+s.stop()
+"""
+MASTER = "local[4]"
+
 
 def main() -> None:
-    from monocator_spark.session import get_spark
+    from monocator_spark.session import DRIVER_JAVA_OPTIONS, DRIVER_MEMORY, get_spark
     from monocator_spark.datagen import corpus as dg
     from scripts.make_pyfiles_zip import build
 
@@ -43,14 +66,14 @@ def main() -> None:
         json.dumps({"n_images": 150, "n_hosts": 8, "n_seeds": 25})
     )
 
-    def submit() -> str:
+    def submit(*app: str) -> str:
         cmd = [
             "spark-submit",
-            "--master", "local[4]",
+            "--master", MASTER,
+            "--driver-memory", DRIVER_MEMORY,
+            "--conf", f"spark.driver.defaultJavaOptions={DRIVER_JAVA_OPTIONS}",
             "--py-files", str(zip_path),
-            str(job),
-            "--world", str(world),
-            "--store", str(work / "store"),
+            *app,
         ]
         print("+", " ".join(cmd), flush=True)
         r = subprocess.run(cmd, capture_output=True, text=True, timeout=600)
@@ -60,15 +83,26 @@ def main() -> None:
             raise SystemExit(f"spark-submit failed rc={r.returncode}")
         return r.stdout
 
-    out1 = submit()
-    stats1 = json.loads([l for l in out1.splitlines() if l.startswith("{")][-1])
+    def last_json(out: str) -> dict:
+        return json.loads([l for l in out.splitlines() if l.startswith("{")][-1])
+
+    crawl = [str(job), "--world", str(world), "--store", str(work / "store")]
+    stats1 = last_json(submit(*crawl))
     assert stats1["fetched"] > 0, stats1
     print(f"SUBMIT RUN ✓ fetched={stats1['fetched']} epochs={stats1['epochs']}")
 
-    out2 = submit()  # resume on a completed store: zero new work
-    stats2 = json.loads([l for l in out2.splitlines() if l.startswith("{")][-1])
+    stats2 = last_json(submit(*crawl))  # resume on a completed store: zero new work
     assert stats2["epochs"] == 0 and stats2["fetched"] == 0, stats2
     print("SUBMIT RESUME NO-OP ✓")
+
+    probe = work / "driver_probe.py"
+    probe.write_text(DRIVER_PROBE)
+    drv = last_json(submit(str(probe)))
+    assert f"-Xmx{DRIVER_MEMORY}" in drv["jvm_args"], drv
+    assert all(o in drv["jvm_args"] for o in DRIVER_JAVA_OPTIONS.split()), drv
+    assert drv["master"] == MASTER, drv
+    assert drv["arrow_batch"] == "2048", drv
+    print(f"SUBMIT DRIVER SETTINGS ✓ {drv['master']} -Xmx{DRIVER_MEMORY} {DRIVER_JAVA_OPTIONS}")
     shutil.rmtree(work)
 
 

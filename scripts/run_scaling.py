@@ -201,7 +201,7 @@ def main() -> None:
     ap.add_argument("--out", default=None,
                     help="summary JSON path (default BENCH/results_scaling.json)")
     ap.add_argument("--no-bucket", action="store_true",
-                    help="use the plain parquet corpus (broadcast fetch join)")
+                    help="use the plain parquet corpus (no bucketed layout)")
     ap.add_argument("--tiny", action="store_true",
                     help="32x32-image world (scheduler-bound regime)")
     ap.add_argument("--mem-per-core", type=int, default=6,

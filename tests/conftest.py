@@ -12,7 +12,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 def spark():
     from monocator_spark.session import get_spark
 
-    s = get_spark("pytest", cores=4, shuffle_partitions=4)
+    # tiered C2 for this one long-lived driver JVM: C1-only (the shipped
+    # default, checked in test_session.py's own process) made the suite
+    # slower, see BENCH/C1_JIT.md
+    s = get_spark("pytest", cores=4, shuffle_partitions=4, extra_conf={
+        "spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=4"})
     yield s
     s.stop()
 

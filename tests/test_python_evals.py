@@ -6,8 +6,8 @@ once per candidate row (one Python node in the ``prepare_candidates``
 plan, and still one in the outlink step's ``enqueue.admit`` plan), the
 Bloom probe runs once per candidate and never over the ``seen`` table, and
 the bucketed fetch + validate pass runs one task per slot, not one per
-corpus bucket. Output equality of the bucketed fetch is guarded by
-``tests/test_bucketed_fetch.py::test_bucketed_equals_broadcast``.
+corpus bucket. The wave rank runs no Python at all. Output equality of
+the bucketed fetch is guarded by ``tests/test_bucketed_fetch.py``.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from monocator_spark.datagen.distributed import (
     CORPUS_BUCKETS, register_bucketed_corpus,
 )
 from monocator_spark.functions.urlnorm import canonicalize_udf
-from monocator_spark.operators import dedup, enqueue, fetch
+from monocator_spark.operators import dedup, enqueue, fetch, politeness
 from test_bucketed_fetch import N_HOSTS, N_IMAGES, world  # noqa: F401
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
@@ -143,6 +143,28 @@ def test_audit_flags_a_pushed_down_udf_filter(spark):
     plan = formatted_plan(twice)
     assert python_eval_nodes(plan) == ["ArrowEvalPython", "ArrowEvalPython"]
     assert "duplicated Python UDF" in audit("twice", plan)
+
+
+def test_select_wave_ranks_without_python(spark):
+    """The global wave rank is a JVM window at every wave size: no Python
+    node in ``select_wave``'s plan over a Python-free input, at a wave size
+    that caps nothing."""
+    schedulable = spark.range(210).select(
+        F.format_string("http://h%d.example/img%d", F.col("id") % 7, "id")
+        .alias("url_norm")
+    ).select(
+        "url_norm",
+        F.xxhash64("url_norm").alias("url_hash"),
+        F.expr("parse_url(url_norm, 'HOST')").alias("host"),
+        F.expr(spec.priority_sql("url_norm")).alias("priority"),
+        F.lit(4).alias("quota"),
+    )
+    cfg = spec.CrawlConfig(n_images=210, n_hosts=7, wave_size=20_000)
+    wave = politeness.select_wave(schedulable, cfg)
+    plan = formatted_plan(wave)
+    assert python_eval_nodes(plan) == [], plan
+    # quota 4 on each of the 7 hosts, numbered 0.. without gaps
+    assert sorted(r.wave_pos for r in wave.collect()) == list(range(28))
 
 
 def test_bucketed_fetch_runs_one_task_per_slot(spark, world):  # noqa: F811

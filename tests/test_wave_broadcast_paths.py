@@ -1,7 +1,7 @@
 """Broadcast vs shuffle wave-key joins — identical crawl output.
 
 The epoch pipeline's wave-bounded join sides (next-frontier anti-join,
-fetch hit/miss split, scan-cache probe, change-detection history prune)
+scan-cache probe, change-detection history prune)
 broadcast only below ``hints.WAVE_BROADCAST_MAX``; a 10^8-row wave at full
 scale takes the shuffle-join path instead (operators/hints.wave_side).
 This pins that the switch is PLAN-ONLY: the same world crawled with the

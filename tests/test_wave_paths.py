@@ -1,10 +1,12 @@
-"""Single-partition vs distributed global rank — identical waves.
+"""Single-partition reference rank vs distributed global rank — identical waves.
 
-``select_wave`` switches to the range-partitioned rank above
-``DISTRIBUTED_RANK_MIN_WAVE``; this pins that both implementations produce
-exactly the same (url, wave_pos) set on the same schedulable input,
-including the mega-host skew fixture, so the switch can never change crawl
-order (the BENCH determinism gate).
+``select_wave`` ranks every wave with ``_ranked_distributed`` (a bucket
+window over analytic priority ranges). This pins that it produces exactly
+the (url, wave_pos) set of the plain single-partition rank
+(``orderBy().limit()`` plus a global ``row_number``), restated inline here
+as the reference, on the same schedulable input and at capped, uncapped
+and in-between wave sizes, so the rank can never change crawl order (the
+BENCH determinism gate).
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ def test_paths_identical(schedulable, wave_size):
     cfg = spec.CrawlConfig(n_images=3000, n_hosts=20, wave_size=wave_size)
     order = [F.col("priority").desc(), F.col("url_hash").asc()]
 
-    # legacy single-partition path
+    # reference: the single-partition rank
     w2 = politeness.Window.partitionBy("host").orderBy(*order)
     salted = schedulable.withColumn(
         "salt", F.pmod(F.col("url_hash"), F.lit(cfg.salt_per_host)).cast("int")
@@ -62,25 +64,3 @@ def test_paths_identical(schedulable, wave_size):
     b = sorted((r.url_hash, r.wave_pos) for r in dist.collect())
     assert a == b
     assert len(a) > 0
-
-
-def test_select_wave_dispatch(schedulable):
-    """select_wave output is path-independent at the threshold boundary."""
-    lo = spec.CrawlConfig(
-        n_images=3000, n_hosts=20,
-        wave_size=politeness.DISTRIBUTED_RANK_MIN_WAVE - 1,
-    )
-    hi = spec.CrawlConfig(
-        n_images=3000, n_hosts=20,
-        wave_size=politeness.DISTRIBUTED_RANK_MIN_WAVE,
-    )
-    a = sorted(
-        (r.url_hash, r.wave_pos)
-        for r in politeness.select_wave(schedulable, lo).collect()
-    )
-    b = sorted(
-        (r.url_hash, r.wave_pos)
-        for r in politeness.select_wave(schedulable, hi).collect()
-    )
-    # both waves are uncapped here (fixture ≪ threshold rows), so equal
-    assert a == b
