@@ -163,7 +163,8 @@ def write_world_distributed(
     table (``corpus_bucketed``): the fetch join then shuffles only the wave
     into the corpus's bucketing — no corpus shuffle, no corpus sort, and no
     driver-side broadcast build per epoch. That is the 100 TB-scale layout:
-    you bucket the crawl target store once at ingest.
+    you bucket the crawl target store once at ingest; ``scripts/gen_world.py``
+    always sets it.
     """
     p = partitions or max(32, spark.sparkContext.defaultParallelism)
 

@@ -10,9 +10,11 @@ LEFT join of the wave to the corpus on image_id, whatever the corpus
 layout. What keeps the 100 TB corpus from being shuffled is the bucketed
 layout (``datagen.distributed.register_bucketed_corpus``): the corpus is
 bucketed and sorted on image_id at ingest, so only the bounded wave moves.
-A plain-parquet corpus (unit worlds) is joined however Spark plans it —
-broadcast when it is small. Never project `bytes` before the wave cut
-(SURVEY.md §7).
+``scripts/gen_world.py`` always writes that table; a plain-parquet corpus
+is left to the small unit-test worlds, where Spark broadcasts it. A plain
+corpus too big to broadcast would be shuffled, payloads included, by a
+sort-merge join every epoch: write large corpora bucketed. Never project
+`bytes` before the wave cut (SURVEY.md §7).
 
 Validation (status 200/404/413/422) runs as ONE grouped Arrow-batched
 pandas UDF over (bytes, dims, caption, phash) — per-row numpy decode inside

@@ -21,14 +21,16 @@ is up before ``get_spark`` runs, so the conf has no effect there; pass
 ``--driver-memory DRIVER_MEMORY`` and ``--conf
 spark.driver.defaultJavaOptions=DRIVER_JAVA_OPTIONS`` on the
 ``spark-submit`` line (``scripts/probe_submit.py`` does). There
-``get_spark`` also leaves the master ``spark-submit`` was given alone; the
-session settings (AQE, the Arrow batch bound, zstd, UTC) still apply.
+``get_spark`` keeps the submitted master and ``--conf`` values and adds
+only the session settings (AQE, the Arrow batch bound, zstd, UTC) the
+submitted conf lacks.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # the driver JVM's heap and JIT options (module docstring)
@@ -42,35 +44,36 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
-    # MONO_SPARK_MASTER overrides the master URL ({cores} is substituted) —
-    # used by scripts/run_scaling.py --local-cluster to run the SAME job on
-    # local-cluster[N,1,mem]: separate executor JVMs with real serialized
-    # shuffle fetch over loopback, the closest this sandbox gets to a
-    # multi-executor cluster.
-    master_tpl = os.environ.get("MONO_SPARK_MASTER", "")
-    master = master_tpl.format(cores=cores) if master_tpl else f"local[{cores}]"
-    b = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    """The engine's session: ``local[cores]`` with the settings below.
+
+    Under ``spark-submit`` (it exports ``PYSPARK_GATEWAY_PORT``, the test
+    pyspark itself makes to join a running driver JVM) that JVM is already
+    up with the master, heap, JVM options and ``--conf`` it was submitted
+    with. There ``cores`` is unused, a setting the submitted conf already
+    holds is kept, the driver heap and JVM options are not written (they
+    would only misreport the running JVM) and the shuffle partitions
+    default to the submitted cluster's ``defaultParallelism``.
+    """
+    submitted = "PYSPARK_GATEWAY_PORT" in os.environ
+    conf = {
+        "spark.app.name": app_name,
         # NOTE: the scaling bench (scripts/run_scaling.py) deliberately
         # DISABLES AQE for its counterbalanced pairings — runtime
         # re-planning makes the physical plan a function of observed sizes,
         # which breaks the "identical plan at N and 4N cores" premise of
         # the efficiency measurement (rationale in BENCH/BASELINE.md).
         # Both defaults are intentional; don't "fix" one to match the other.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # bound Arrow batches: rows carry up to ~1 MiB binary payloads
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+        "spark.sql.files.maxPartitionBytes": "134217728",
         # the dominant cached data is already-compressed image payloads;
         # columnar-cache compression on them is a pure codec tax (measured:
         # +16% crawl throughput in the payload-bound regime with it off)
-        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
+        "spark.sql.inMemoryColumnarStorage.compressed": "false",
         # zstd for shuffle/broadcast/spill (default lz4). Measured on this
         # workload (BENCH/BASELINE.md round-4, 3 counterbalanced pairs per
         # width, all reps filed): shuffle bytes shrink to 0.664x lz4
@@ -80,35 +83,53 @@ def get_spark(
         # artifacts at n<=2). Kept because the byte shrink is the real,
         # deterministic effect: on a multi-executor cluster shuffle bytes
         # traverse the network, which is where this codec choice pays.
-        .config("spark.io.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", DRIVER_MEMORY))
-        # C1-only JIT (module docstring). scripts/cpu_by_thread.py on one
-        # perfbench crawl_wide run (local[4], 4 vCPU): the JVM's 133 CPU-s
-        # held 73 s of C1/C2 CompilerThreads, 23 s of executor tasks, 18 s
-        # of driver/py4j threads and 6 s of GC; with C1 only the compiler
-        # threads fall to ~11 s and the task threads stay at ~21 s. C1-only
-        # also shrinks the code cache default from 240 MB to 48 MB; the
-        # 20-minute test-suite session filled it and the code-cache sweeper
-        # took 484 CPU-s, so the tiered size is kept
-        .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    # with the gateway port in the environment (spark-submit launched this
-    # process) pyspark joins the running driver JVM, whose master is the
-    # one it was submitted with
-    if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        b = b.master(master)
+        "spark.io.compression.codec": "zstd",
+        "spark.ui.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
+    }
+    b = SparkSession.builder
+    if submitted:
+        SparkContext._ensure_initialized()  # joins the submitted JVM
+        have = SparkConf()  # loads the submitted conf
+        conf = {k: v for k, v in conf.items() if not have.contains(k)}
+        if shuffle_partitions:
+            conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    else:
+        cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        # MONO_SPARK_MASTER overrides the master URL ({cores} is substituted) —
+        # used by scripts/run_scaling.py --local-cluster to run the SAME job on
+        # local-cluster[N,1,mem]: separate executor JVMs with real serialized
+        # shuffle fetch over loopback, the closest this sandbox gets to a
+        # multi-executor cluster.
+        master_tpl = os.environ.get("MONO_SPARK_MASTER", "")
+        b = b.master(master_tpl.format(cores=cores) if master_tpl else f"local[{cores}]")
+        conf.update({
+            "spark.sql.shuffle.partitions": str(shuffle_partitions or max(cores, 8)),
+            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", DRIVER_MEMORY),
+            # C1-only JIT (module docstring). scripts/cpu_by_thread.py on one
+            # perfbench crawl_wide run (local[4], 4 vCPU): the JVM's 133 CPU-s
+            # held 73 s of C1/C2 CompilerThreads, 23 s of executor tasks, 18 s
+            # of driver/py4j threads and 6 s of GC; with C1 only the compiler
+            # threads fall to ~11 s and the task threads stay at ~21 s. C1-only
+            # also shrinks the code cache default from 240 MB to 48 MB; the
+            # 20-minute test-suite session filled it and the code-cache sweeper
+            # took 484 CPU-s, so the tiered size is kept
+            "spark.driver.defaultJavaOptions": DRIVER_JAVA_OPTIONS,
+        })
     # ad-hoc conf overrides for experiments: "k=v;k=v"
     for kv in filter(None, os.environ.get("MONO_SPARK_CONF", "").split(";")):
         k, _, v = kv.partition("=")
-        b = b.config(k.strip(), v.strip())
+        conf[k.strip()] = v.strip()
     ev_dir = os.environ.get("SPARK_EVENTLOG_DIR")
     if ev_dir:
         os.makedirs(ev_dir, exist_ok=True)
-        b = b.config("spark.eventLog.enabled", "true").config(
-            "spark.eventLog.dir", ev_dir
-        )
-    for k, v in (extra_conf or {}).items():
+        conf.update({"spark.eventLog.enabled": "true", "spark.eventLog.dir": ev_dir})
+    conf.update(extra_conf or {})
+    for k, v in conf.items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    sc = spark.sparkContext
+    if submitted and not sc.getConf().contains("spark.sql.shuffle.partitions"):
+        # one task per slot, as local[N] gets from its cores
+        spark.conf.set("spark.sql.shuffle.partitions", str(max(sc.defaultParallelism, 8)))
+    return spark

@@ -13,8 +13,9 @@ over the URL-seen set. Identical checksums across parallelism levels ⇒
 identical crawl order and seen set.
 
 Also usable under spark-submit for cluster packaging (north_rule:
-"spark-submit --py-files"); the submitted master is kept, and ``--cores``
-then sets only the default shuffle partitions:
+"spark-submit --py-files"); the submitted master and ``--conf`` are kept,
+``--cores`` then sets only the shuffle partitions, and without it the
+partitions and the reported ``cores`` are the cluster's defaultParallelism:
     spark-submit --py-files dist/monocator_spark.zip \
         scripts/bench_crawl.py --world ... --out ...
 """
@@ -35,11 +36,17 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--world", required=True)
-    ap.add_argument("--cores", type=int, default=32)
+    ap.add_argument(
+        "--cores", type=int, default=None,
+        help="local[N] cores (default: get_spark's); under spark-submit the"
+        " submitted master is kept and this sets only the shuffle partitions."
+        " Reported as `cores`; without it, the session's defaultParallelism",
+    )
     ap.add_argument(
         "--shuffle-partitions", type=int, default=None,
-        help="shuffle partitions (default: cores — 1 task/core; a real"
-        " cluster wants 2-4x total cores so stragglers don't idle slots)",
+        help="shuffle partitions (default: --cores — 1 task/core — else"
+        " get_spark's; a real cluster wants 2-4x total cores so stragglers"
+        " don't idle slots)",
     )
     ap.add_argument(
         "--seen-filter", choices=["bloom", "cuckoo"], default="bloom",
@@ -83,13 +90,13 @@ def main() -> None:
     from monocator_spark.session import get_spark
     from monocator_spark.sources.store import SnapshotStore
 
-    cores = args.cores
     spark = get_spark(
         "bench-crawl",
-        cores=cores,
-        shuffle_partitions=args.shuffle_partitions or cores,
+        cores=args.cores,
+        shuffle_partitions=args.shuffle_partitions or args.cores,
     )
     spark.sparkContext.setLogLevel("ERROR")
+    cores = args.cores or spark.sparkContext.defaultParallelism
 
     store_dir = args.store or f"/tmp/mono_bench_store_c{cores}"
     shutil.rmtree(store_dir, ignore_errors=True)

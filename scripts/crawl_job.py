@@ -8,8 +8,8 @@ checkpoint"). Kill it at any point; rerunning with the same arguments
 completes the crawl with byte-identical outputs.
 
 Cluster (``monocator_spark.session.DRIVER_MEMORY`` and
-``DRIVER_JAVA_OPTIONS`` go on the submit line; the session settings and
-the submitted master come through ``get_spark``):
+``DRIVER_JAVA_OPTIONS`` go on the submit line; ``get_spark`` keeps the
+submitted master and ``--conf`` and adds the session settings they lack):
     spark-submit --py-files dist/monocator_spark.zip \
         --driver-memory <DRIVER_MEMORY> \
         --conf spark.driver.defaultJavaOptions=<DRIVER_JAVA_OPTIONS> \

@@ -6,6 +6,11 @@ function of (n_images, n_hosts, n_seeds, dup_frac), so an existing dir with
 a matching ``_WORLD_META.json`` is reused as-is. The SAME world directory
 must back both parallelism levels of the scaling run ("identical job,
 identical input", BASELINE.md evidence protocol).
+
+The corpus is always also written as the bucketed ``corpus_bucketed``
+table: it is the layout that keeps the fetch join from shuffling the
+corpus, so a plain-only corpus is left to the small unit-test worlds
+(``datagen.corpus.write_world``).
 """
 
 from __future__ import annotations
@@ -26,7 +31,7 @@ def world_meta(args: argparse.Namespace) -> dict:
         "n_hosts": args.hosts,
         "n_seeds": args.seeds,
         "dup_frac": args.dup_frac,
-        "bucket_corpus": bool(args.bucket),
+        "bucket_corpus": True,
         "tiny_images": bool(args.tiny),
     }
 
@@ -57,7 +62,7 @@ def ensure_world(out_dir: str, meta: dict, cores: int = 32) -> dict:
         n_hosts=meta["n_hosts"],
         n_seeds=meta["n_seeds"],
         dup_frac=meta["dup_frac"],
-        bucket_corpus=meta.get("bucket_corpus", False),
+        bucket_corpus=True,
         tiny_images=meta.get("tiny_images", False),
     )
     meta = dict(meta, gen_sec=round(time.monotonic() - t0, 1), gen_cores=cores)
@@ -75,7 +80,9 @@ def main() -> None:
     ap.add_argument("--seeds", type=int, default=1_500_000)
     ap.add_argument("--dup-frac", type=float, default=0.2)
     ap.add_argument("--cores", type=int, default=32)
-    ap.add_argument("--bucket", action="store_true", help="also write bucketed corpus table")
+    # accepted so older command lines still parse; the bucketed table is
+    # always written (module docstring)
+    ap.add_argument("--bucket", action="store_true", help=argparse.SUPPRESS)
     ap.add_argument("--tiny", action="store_true", help="32x32 images only (scheduler-bound regime)")
     args = ap.parse_args()
     meta = ensure_world(args.out, world_meta(args), cores=args.cores)

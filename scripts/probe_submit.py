@@ -11,10 +11,11 @@ store and asserts the resume is a no-op (already-complete crawl).
 
 The submit line carries the driver's heap and JVM options from
 ``session.DRIVER_MEMORY`` / ``session.DRIVER_JAVA_OPTIONS`` (the driver
-JVM is up before ``get_spark`` runs). A third submit, with the same line,
-runs ``get_spark`` and asserts that the driver JVM got them, that the
-session kept the submitted master and that it carries ``get_spark``'s
-Arrow batch bound.
+JVM is up before ``get_spark`` runs). A third submit, with the same line
+plus one ``--conf`` of a key ``get_spark`` also sets, runs ``get_spark``
+and asserts that the driver JVM got them, that the session kept the
+submitted master and ``--conf`` and reports the heap the JVM has, and
+that it carries ``get_spark``'s Arrow batch bound.
 """
 
 from __future__ import annotations
@@ -40,10 +41,14 @@ print(json.dumps({
     "master": s.sparkContext.master,
     "jvm_args": list(mx.getInputArguments()),
     "arrow_batch": s.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"),
+    "codec": s.conf.get("spark.io.compression.codec"),
+    "driver_memory": s.conf.get("spark.driver.memory"),
 }))
 s.stop()
 """
 MASTER = "local[4]"
+# a submitted --conf of a key get_spark sets (to zstd): it must be kept
+CODEC = "lz4"
 
 
 def main() -> None:
@@ -66,12 +71,13 @@ def main() -> None:
         json.dumps({"n_images": 150, "n_hosts": 8, "n_seeds": 25})
     )
 
-    def submit(*app: str) -> str:
+    def submit(*app: str, conf: tuple[str, ...] = ()) -> str:
         cmd = [
             "spark-submit",
             "--master", MASTER,
             "--driver-memory", DRIVER_MEMORY,
             "--conf", f"spark.driver.defaultJavaOptions={DRIVER_JAVA_OPTIONS}",
+            *conf,
             "--py-files", str(zip_path),
             *app,
         ]
@@ -97,10 +103,12 @@ def main() -> None:
 
     probe = work / "driver_probe.py"
     probe.write_text(DRIVER_PROBE)
-    drv = last_json(submit(str(probe)))
+    drv = last_json(submit(str(probe), conf=("--conf", f"spark.io.compression.codec={CODEC}")))
     assert f"-Xmx{DRIVER_MEMORY}" in drv["jvm_args"], drv
     assert all(o in drv["jvm_args"] for o in DRIVER_JAVA_OPTIONS.split()), drv
     assert drv["master"] == MASTER, drv
+    assert drv["codec"] == CODEC, drv
+    assert drv["driver_memory"] == DRIVER_MEMORY, drv
     assert drv["arrow_batch"] == "2048", drv
     print(f"SUBMIT DRIVER SETTINGS ✓ {drv['master']} -Xmx{DRIVER_MEMORY} {DRIVER_JAVA_OPTIONS}")
     shutil.rmtree(work)

@@ -200,8 +200,6 @@ def main() -> None:
                     help="repetitions per level; best run is reported")
     ap.add_argument("--out", default=None,
                     help="summary JSON path (default BENCH/results_scaling.json)")
-    ap.add_argument("--no-bucket", action="store_true",
-                    help="use the plain parquet corpus (no bucketed layout)")
     ap.add_argument("--tiny", action="store_true",
                     help="32x32-image world (scheduler-bound regime)")
     ap.add_argument("--mem-per-core", type=int, default=6,
@@ -226,7 +224,7 @@ def main() -> None:
             "n_hosts": args.hosts,
             "n_seeds": args.seeds,
             "dup_frac": args.dup_frac,
-            "bucket_corpus": not args.no_bucket,
+            "bucket_corpus": True,
             "tiny_images": args.tiny,
         },
     )
