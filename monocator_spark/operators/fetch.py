@@ -96,10 +96,11 @@ def fetch_wave_bucketed(
     The join keeps the corpus's bucket count (64 in the bench worlds) as
     its partition count; the joined rows are coalesced (no shuffle) to the
     cluster's slot count before the validate UDF. Each Python task pays a
-    fixed start-up charge whatever its row count — about 0.2 CPU-s on a
-    4-vCPU host, mostly pyspark's per-task ``importlib.invalidate_caches()``
-    re-reading the zipped package — so validating a 64-bucket join in 64
-    small tasks on 4 slots spent most of its Python time on that charge.
+    fixed charge whatever its row count: about 15 ms of worker CPU for an
+    RDD task and 35 ms for a ``mapInPandas`` task on a 4-vCPU host, with the
+    worker launcher of ``session.py`` (about 0.2 CPU-s without it, see the
+    ROADMAP's "Python task cost"). Validating a 64-bucket join in 64 small
+    tasks on 4 slots would pay it 16 times per slot instead of once.
     Every reader of the cached result (retry / perm-failed, outlink
     expansion with its canonicalizer, the next frontier, the output
     flushes) inherits the coalesced partitioning. Where slots ≥ buckets

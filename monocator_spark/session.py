@@ -24,18 +24,39 @@ spark.driver.defaultJavaOptions=DRIVER_JAVA_OPTIONS`` on the
 ``get_spark`` keeps the submitted master and ``--conf`` values and adds
 only the session settings (AQE, the Arrow batch bound, zstd, UTC) the
 submitted conf lacks.
+
+Python workers start through ``pyworker.sh``, a launcher next to this
+module: ``get_spark`` points ``PYSPARK_PYTHON`` at it while the
+SparkContext starts and passes the interpreter the caller chose (their
+``PYSPARK_PYTHON``, else ``sys.executable``) in the workers' environment.
+The launcher drops the ``.zip`` and ``.jar`` entries Spark puts on the
+worker's ``PYTHONPATH`` (``pyspark.zip``, the py4j zip and the spark-core
+jar) and execs that interpreter, which then imports pyspark from its own
+site-packages. pyspark calls ``importlib.invalidate_caches()`` before every
+task, and on Python 3.11 that makes each cached zipimporter re-read its
+whole archive directory: about 0.2 CPU-s per task on a 4-vCPU host with the
+zips, a tenth of that without (ROADMAP, "Python task cost"). Since workers
+no longer import ``pyspark.zip``, ``get_spark`` raises if the driver's
+pyspark is not the JVM's Spark version. Under ``spark-submit`` the
+launcher is not used: there ``--py-files`` and the cluster own the
+workers' interpreter and ``PYTHONPATH``.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+from pathlib import Path
 
+import pyspark
 from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # the driver JVM's heap and JIT options (module docstring)
 DRIVER_MEMORY = "8g"
 DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
+# the Python worker launcher (module docstring)
+WORKER_LAUNCHER = str(Path(__file__).with_name("pyworker.sh"))
 
 
 def get_spark(
@@ -51,8 +72,10 @@ def get_spark(
     up with the master, heap, JVM options and ``--conf`` it was submitted
     with. There ``cores`` is unused, a setting the submitted conf already
     holds is kept, the driver heap and JVM options are not written (they
-    would only misreport the running JVM) and the shuffle partitions
-    default to the submitted cluster's ``defaultParallelism``.
+    would only misreport the running JVM), the shuffle partitions
+    default to the submitted cluster's ``defaultParallelism`` and the
+    Python workers keep the submitted interpreter. Elsewhere they start
+    through the worker launcher (module docstring).
     """
     submitted = "PYSPARK_GATEWAY_PORT" in os.environ
     conf = {
@@ -115,19 +138,37 @@ def get_spark(
             # 20-minute test-suite session filled it and the code-cache sweeper
             # took 484 CPU-s, so the tiered size is kept
             "spark.driver.defaultJavaOptions": DRIVER_JAVA_OPTIONS,
+            # the interpreter the worker launcher execs (module docstring)
+            "spark.executorEnv.MONOCATOR_WORKER_PYTHON":
+                os.environ.get("PYSPARK_PYTHON") or sys.executable,
         })
     # ad-hoc conf overrides for experiments: "k=v;k=v"
     for kv in filter(None, os.environ.get("MONO_SPARK_CONF", "").split(";")):
         k, _, v = kv.partition("=")
         conf[k.strip()] = v.strip()
-    ev_dir = os.environ.get("SPARK_EVENTLOG_DIR")
-    if ev_dir:
-        os.makedirs(ev_dir, exist_ok=True)
-        conf.update({"spark.eventLog.enabled": "true", "spark.eventLog.dir": ev_dir})
     conf.update(extra_conf or {})
     for k, v in conf.items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
+    if submitted:
+        spark = b.getOrCreate()
+    else:
+        # pyspark reads PYSPARK_PYTHON once, when the SparkContext starts;
+        # restored after, so a spark-submit this process starts later does
+        # not run its driver or workers through the launcher
+        caller_python = os.environ.get("PYSPARK_PYTHON")
+        os.environ["PYSPARK_PYTHON"] = WORKER_LAUNCHER
+        try:
+            spark = b.getOrCreate()
+        finally:
+            if caller_python is None:
+                del os.environ["PYSPARK_PYTHON"]
+            else:
+                os.environ["PYSPARK_PYTHON"] = caller_python
+        if pyspark.__version__ != spark.version:
+            raise RuntimeError(
+                f"pyspark {pyspark.__version__} cannot drive Spark {spark.version}: "
+                "the Python workers import pyspark from their interpreter, "
+                "not from Spark's pyspark.zip")
     sc = spark.sparkContext
     if submitted and not sc.getConf().contains("spark.sql.shuffle.partitions"):
         # one task per slot, as local[N] gets from its cores

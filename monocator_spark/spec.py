@@ -35,12 +35,13 @@ BLOOM_NUM_HASHES = 7
 def bloom_bits_for(n_expected: int, shards: int = BLOOM_SHARDS) -> int:
     """Bits/shard sized for ~n_expected TOTAL insertions across all shards.
 
-    ≥16 bits per element with k=7 keeps the false-positive rate ≤~0.1%;
-    undersizing is a silent superlinear cost, not a correctness bug (every
-    maybe-seen row takes the exact-confirm join, so a 30% FP rate turns the
-    O(new) dedup into an O(candidates) shuffle join — measured on the
-    6M-image bench world before this sizing existed). Rounded up to a power
-    of two, floor at the local default.
+    ≥16 bits per element with k=7 keeps the false-positive rate ≤~0.1%.
+    ``dedup.filter_new`` sends every candidate into one left-anti join with
+    ``seen`` and puts ``maybe_seen`` in its condition, so the sizing no
+    longer decides which rows reach that join: it bounds only the
+    false-positive confirm work inside it (a filter miss matches no ``seen``
+    row). Undersizing is a cost, not a correctness bug. Rounded up to a
+    power of two, floor at the local default.
     """
     import math
 

@@ -14,13 +14,18 @@ The submit line carries the driver's heap and JVM options from
 JVM is up before ``get_spark`` runs). A third submit, with the same line
 plus one ``--conf`` of a key ``get_spark`` also sets, runs ``get_spark``
 and asserts that the driver JVM got them, that the session kept the
-submitted master and ``--conf`` and reports the heap the JVM has, and
-that it carries ``get_spark``'s Arrow batch bound.
+submitted master and ``--conf`` and reports the heap the JVM has, that
+it carries ``get_spark``'s Arrow batch bound, and that its Python tasks
+run on the submitted interpreter (``PYSPARK_PYTHON``, set to this
+interpreter) with Spark's ``pyspark.zip``, not through ``get_spark``'s
+worker launcher. The probe's own ``get_spark`` session runs first, so this
+also checks that it leaves ``PYSPARK_PYTHON`` as it found it.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import subprocess
 import sys
@@ -34,6 +39,11 @@ sys.path.insert(0, str(REPO))
 DRIVER_PROBE = """
 import json
 from monocator_spark.session import get_spark
+
+def worker(_):
+    import sys, pyspark
+    yield json.dumps({"executable": sys.executable, "pyspark_file": pyspark.__file__})
+
 s = get_spark("submit-probe-driver")
 jvm = s.sparkContext._jvm
 mx = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
@@ -43,6 +53,8 @@ print(json.dumps({
     "arrow_batch": s.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"),
     "codec": s.conf.get("spark.io.compression.codec"),
     "driver_memory": s.conf.get("spark.driver.memory"),
+    "python_exec": s.sparkContext.pythonExec,
+    "worker": json.loads(s.sparkContext.parallelize([0], 1).mapPartitions(worker).first()),
 }))
 s.stop()
 """
@@ -56,6 +68,9 @@ def main() -> None:
     from monocator_spark.datagen import corpus as dg
     from scripts.make_pyfiles_zip import build
 
+    # the submitted interpreter: get_spark runs this process's workers
+    # through its launcher, the submitted apps' must run on this
+    os.environ["PYSPARK_PYTHON"] = sys.executable
     zip_path = build()
     work = Path(tempfile.mkdtemp(prefix="submit_probe_"))
     job = work / "crawl_job.py"
@@ -110,7 +125,11 @@ def main() -> None:
     assert drv["codec"] == CODEC, drv
     assert drv["driver_memory"] == DRIVER_MEMORY, drv
     assert drv["arrow_batch"] == "2048", drv
+    assert drv["python_exec"] == sys.executable, drv
+    assert drv["worker"]["executable"] == sys.executable, drv
+    assert "/pyspark.zip/" in drv["worker"]["pyspark_file"], drv
     print(f"SUBMIT DRIVER SETTINGS ✓ {drv['master']} -Xmx{DRIVER_MEMORY} {DRIVER_JAVA_OPTIONS}")
+    print(f"SUBMIT PYTHON WORKERS ✓ {drv['worker']['executable']} with pyspark.zip")
     shutil.rmtree(work)
 
 
