@@ -31,6 +31,15 @@ s = get_spark("launcher-test", cores=1)
 seen = json.loads(s.sparkContext.parallelize([0], 1).mapPartitions(report).first())
 seen.update(spark_version=s.version, python_exec=s.sparkContext.pythonExec,
             driver_pyspark_python=os.environ.get("PYSPARK_PYTHON"))
+
+# a driver pyspark that is not the JVM's Spark version (getOrCreate reuses s)
+import pyspark
+pyspark.__version__, real = "0.0.0", pyspark.__version__
+try:
+    get_spark("launcher-test", cores=1)
+except RuntimeError as e:
+    seen["mismatch_error"] = str(e)
+pyspark.__version__ = real
 print(json.dumps(seen))
 s.stop()
 """
@@ -48,7 +57,8 @@ def _probe(env: dict) -> dict:
 def test_worker_imports_pyspark_without_zips():
     """A Python task runs with no zipimporter cached (so pyspark's per-task
     ``importlib.invalidate_caches()`` has no archive to re-read) and imports
-    pyspark from a directory, at the JVM's Spark version."""
+    pyspark from a directory, at the JVM's Spark version; ``get_spark``
+    refuses a driver pyspark of another version."""
     env = {k: v for k, v in os.environ.items() if k != "PYSPARK_PYTHON"}
     seen = _probe(env)
     assert seen["python_exec"].endswith("monocator_spark/pyworker.sh"), seen
@@ -57,6 +67,7 @@ def test_worker_imports_pyspark_without_zips():
     assert seen["pyspark_version"] == seen["spark_version"], seen
     assert seen["executable"] == sys.executable, seen
     assert seen["driver_pyspark_python"] is None, seen
+    assert "pyspark 0.0.0 cannot drive Spark" in seen.get("mismatch_error", ""), seen
 
 
 def test_worker_launcher_execs_the_callers_interpreter(tmp_path):
