@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from monocator_spark import spec
+from monocator_spark.sim.simulator import OK
 
 
 def policy_col(host_col: str = "host") -> F.Column:
@@ -54,17 +55,19 @@ def decision_col() -> F.Column:
 
 
 def with_screenshot(
-    ok: DataFrame, hist: DataFrame | None, epoch: int, cfg: spec.CrawlConfig
+    fetched: DataFrame, hist: DataFrame | None, epoch: int, cfg: spec.CrawlConfig
 ) -> DataFrame:
-    """ok(fetched-OK rows) → + (prior_phash, policy, screenshot) columns.
+    """fetched(one epoch's fetch rows, every status) → + (prior_phash, policy,
+    screenshot) columns, null on the non-OK rows — the ``fetched`` table.
 
-    ``hist`` is the OK-row phash history as of the previous epoch — the
-    narrow ``phash_hist`` state table: (image_id, fetch_epoch, wave_pos,
-    phash), already OK-filtered at write time (None on the first epoch or
-    when change detection is disabled — every row then counts as a first
-    fetch, prior_phash null). It is deliberately NOT the bytes-bearing
-    ``fetched`` table: consuming that as state would drag the payload
-    write onto the inter-epoch critical path.
+    Only OK rows enter the prior lookup. ``hist`` is the OK-row phash
+    history as of the previous epoch — the narrow ``phash_hist`` state
+    table: (image_id, fetch_epoch, wave_pos, phash), already OK-filtered at
+    write time (None on the first epoch or when change detection is
+    disabled — every row then counts as a first fetch, prior_phash null).
+    It is deliberately NOT the bytes-bearing ``fetched`` table: consuming
+    that as state would drag the payload write onto the inter-epoch
+    critical path.
 
     Tie + identity discipline (matching the simulator's sequential
     ``last_phash`` update by wave position): the lag window is totally
@@ -76,14 +79,17 @@ def with_screenshot(
 
     The history prune and prior join build from wave-bounded sides —
     broadcast below hints.WAVE_BROADCAST_MAX, shuffle join above it (a
-    10^8-row wave cannot be a driver broadcast).
+    10^8-row wave cannot be a driver broadcast; that join then shuffles
+    the wave rows, payload included).
     """
     from monocator_spark.operators.hints import wave_side
 
+    is_ok = F.col("status") == OK
     if hist is None and not cfg.change_detection:
         # detection off: every fetch is a first fetch by definition
-        out = ok.withColumn("prior_phash", F.lit(None).cast("long"))
+        out = fetched.withColumn("prior_phash", F.lit(None).cast("long"))
     else:
+        ok = fetched.where(is_ok)
         cur = ok.select(
             "image_id", F.lit(epoch).alias("fetch_epoch"), "wave_pos",
             "phash", "url_hash",
@@ -110,7 +116,8 @@ def with_screenshot(
             .where(F.col("fetch_epoch") == epoch)
             .select("url_hash", "prior_phash")
         )
-        out = ok.join(wave_side(prior, cfg), "url_hash", "left")
-    return out.withColumn("policy", policy_col()).withColumn(
-        "screenshot", decision_col()
+        # prior holds OK rows only: a non-OK row's prior_phash stays null
+        out = fetched.join(wave_side(prior, cfg), "url_hash", "left")
+    return out.withColumn("policy", F.when(is_ok, policy_col())).withColumn(
+        "screenshot", F.when(is_ok, decision_col())
     )

@@ -7,13 +7,15 @@ Design for 10^10 URLs:
   * Bloom shards are persistent crawl state (shard = url_hash & (S-1)),
     OR-merged once per epoch — associative/commutative, never
     read-modify-write inside an epoch (SURVEY.md §7 hard-parts).
-  * The Bloom answer is only a *pre-filter*: "definitely new" rows can
-    never match the exact check (no false negatives), "maybe seen" rows —
-    the dedup hits plus an ε of false positives — are confirmed by a
-    left-anti join against the exact `seen` table, hash-partitioned on
-    url_hash, whose condition carries the Bloom answer. The crawl order
-    stays *exactly* equal to the reference simulator's (a raw Bloom would
-    drop false-positive URLs and diverge).
+  * Dedup is one left-anti join of every candidate against the exact
+    `seen` table, hash-partitioned on url_hash, so the crawl order stays
+    *exactly* equal to the reference simulator's (a raw Bloom would drop
+    false-positive URLs and diverge). The Bloom answer (``maybe_seen``)
+    rides in that join's condition. It is not a fast path: every
+    candidate, "definitely new" or not, enters the join, and since the
+    filter has no false negatives the answer never turns away a true
+    match — it changes no row count and saves no join work, while its
+    build, merge and probe run every epoch.
   * Probe/build/merge are grouped-map pandas UDFs over numpy bit ops —
     one Arrow batch per shard, zero per-row Python.
 
@@ -259,15 +261,15 @@ def filter_new(
     bloom: DataFrame | None,
     cfg: spec.CrawlConfig,
 ) -> DataFrame:
-    """Exact-semantics dedup with the approximate-filter fast path.
+    """Exact dedup: one left-anti join of the tagged candidates to `seen`.
 
-    One left-anti join of the tagged candidates to `seen`, with
-    ``maybe_seen`` in the join condition: definitely-new rows never match a
-    seen row, maybe-seen rows are confirmed exactly. The probe runs once per
+    ``maybe_seen`` sits in the join condition, and every candidate enters
+    the join. A definitely-new row could never match a seen row anyway (no
+    false negatives), so the answer changes no row count: the result, the
+    truly-new candidates, is the plain anti-join's. The probe runs once per
     candidate, never over `seen` (a ``where(maybe_seen)`` before the join
-    lets Catalyst infer the probe onto `seen` through ``url_hash``).
-    Result = truly-new candidates. ``bloom`` is the state of whichever
-    structure cfg.seen_filter selects.
+    would let Catalyst infer the probe onto `seen` through ``url_hash``).
+    ``bloom`` is the state of whichever structure cfg.seen_filter selects.
     """
     if seen is None:
         return cands

@@ -23,7 +23,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from monocator_spark import spec
 from monocator_spark.operators import (
@@ -44,6 +44,16 @@ class RunStats:
     failed: int = 0
     elapsed_sec: float = 0.0
     per_epoch: list[dict] = field(default_factory=list)
+
+
+def _retried() -> Column:
+    """A 404 still under its retry budget: it re-enters the frontier."""
+    return (F.col("status") == MISSING) & (F.col("retries") < spec.MAX_RETRIES)
+
+
+def _perm_failed() -> Column:
+    """A fetch that failed for good: any other non-OK status."""
+    return (F.col("status") != OK) & ~_retried()
 
 
 class CrawlEngine:
@@ -280,15 +290,7 @@ class CrawlEngine:
             status_obs,
             F.count(F.lit(1)).alias("n_rows"),  # = wave size: 1 row per URL
             F.sum((F.col("status") == OK).cast("long")).alias("n_ok"),
-            F.sum(
-                (
-                    (F.col("status") != OK)
-                    & ~(
-                        (F.col("status") == MISSING)
-                        & (F.col("retries") < spec.MAX_RETRIES)
-                    )
-                ).cast("long")
-            ).alias("n_failed_perm"),
+            F.sum(_perm_failed().cast("long")).alias("n_failed_perm"),
         ).persist()
         persisted.append(meta)
         # Pin the cache NOW, with its own action (the status Observation
@@ -317,21 +319,17 @@ class CrawlEngine:
             if cfg.change_detection
             else None
         )
-        ok = meta.where(F.col("status") == OK)
-        shot = change.with_screenshot(ok, hist, epoch, cfg)
-        retry = (
-            meta.where(
-                (F.col("status") == MISSING) & (F.col("retries") < spec.MAX_RETRIES)
-            )
-            .select(
-                "url_norm", "url_hash", "host", "priority", "depth",
-                (F.col("retries") + 1).alias("retries"), "quota",
-            )
+        # the epoch's one row-per-fetch output table; non-OK bodies are
+        # nulled (nobody consumes a failed body)
+        fetched_out = change.with_screenshot(
+            meta.withColumn("bytes", F.when(F.col("status") == OK, F.col("bytes"))),
+            hist, epoch, cfg,
         )
-        perm_failed = meta.where(
-            (F.col("status") != OK)
-            & ~((F.col("status") == MISSING) & (F.col("retries") < spec.MAX_RETRIES))
-        ).select("url_hash", "url_norm", "status", F.lit(epoch).alias("epoch"))
+        ok = meta.where(F.col("status") == OK)
+        retry = meta.where(_retried()).select(
+            "url_norm", "url_hash", "host", "priority", "depth",
+            (F.col("retries") + 1).alias("retries"), "quota",
+        )
 
         # outlink discovery → the shared enqueue rule (dedup vs seen → gate)
         admitted = new_entries = denied_new = lineage = None
@@ -408,9 +406,8 @@ class CrawlEngine:
 
         return {
             "epoch": epoch, "t0": t0, "timing": timing, "n_wave": n_wave,
-            "frontier_size": frontier_size, "wave": wave,
-            "meta": meta, "shot": shot,
-            "perm_failed": perm_failed, "new_entries": new_entries,
+            "frontier_size": frontier_size,
+            "meta": meta, "fetched": fetched_out, "new_entries": new_entries,
             "denied_new": denied_new, "lineage": lineage,
             "next_frontier": next_frontier, "bloom_next": bloom_next,
             "scans": scans, "host_next": host_next_new,
@@ -423,19 +420,18 @@ class CrawlEngine:
 
         The STATE tables (frontier, seen, bloom, the scan caches) are
         staged first and ``state_ready`` is signalled so epoch k+1's
-        compute can start; the heavy payload flush (``fetched``, written
-        from the cached validate output with non-OK bodies nulled), the
-        narrow flushes and the commit overlap it. Under change detection
-        the lag-based prior_phash lookup consumes per-epoch history as
-        STATE — that history is the NARROW ``phash_hist`` table (a
-        projection of the cached validate output), staged before
-        ``state_ready`` fires; the bytes-bearing ``fetched`` write itself
-        is pure output and always overlaps the next epoch's compute."""
+        compute can start; the heavy payload flush (``fetched``: every wave
+        row with its screenshot decision, written from the cached validate
+        output with non-OK bodies nulled), the other output flushes and
+        the commit overlap it. Under change detection the lag-based
+        prior_phash lookup consumes per-epoch history as STATE — that
+        history is the NARROW ``phash_hist`` table (a projection of the
+        cached validate output), staged before ``state_ready`` fires; the
+        bytes-bearing ``fetched`` write itself is pure output and always
+        overlaps the next epoch's compute."""
         cfg = self.cfg
         st = self.store
         epoch = ctx["epoch"]
-        wave = ctx["wave"]
-        perm_failed = ctx["perm_failed"]
         new_entries, denied_new = ctx["new_entries"], ctx["denied_new"]
         lineage = ctx["lineage"]
         t_flush = time.monotonic()
@@ -468,35 +464,8 @@ class CrawlEngine:
             state_ready.set()  # next epoch may now preview the staged state
         ctx["timing"]["state_flush"] = round(time.monotonic() - t_flush, 2)
 
-        flushes: list = [
-            lambda: st.stage_append(
-                "order",
-                wave.select(
-                    F.lit(epoch).alias("epoch"), "wave_pos", "url_norm", "url_hash"
-                ),
-                epoch + 1,
-            ),
-            # screenshot decisions + lag-derived priors: a NARROW side table
-            # aligned to fetched on (url_hash, fetch_epoch)
-            lambda: st.stage_append(
-                "shot",
-                ctx["shot"].select(
-                    "url_hash", "fetch_epoch", "prior_phash", "policy",
-                    "screenshot",
-                ),
-                epoch + 1,
-            ),
-            lambda: st.stage_append("failed", perm_failed, epoch + 1),
-            # the payload straight from the cached validate output; non-OK
-            # bodies are nulled (nobody consumes a failed body)
-            lambda: st.stage_append(
-                "fetched",
-                ctx["meta"].withColumn(
-                    "bytes", F.when(F.col("status") == OK, F.col("bytes"))
-                ),
-                epoch + 1,
-            ),
-        ]
+        # the payload straight from the cached validate output
+        flushes: list = [partial(st.stage_append, "fetched", ctx["fetched"], epoch + 1)]
         flushes += [
             partial(st.stage_append, m.table, rows, epoch + 1)
             for m, rows, _fresh in ctx["scans"]
@@ -717,29 +686,32 @@ class CrawlEngine:
         return stats
 
     # -- outputs for golden-file comparison ---------------------------------------
+    # ``fetched`` is the one row-per-fetch table; the crawl order, the OK
+    # fetches and the permanent failures are views of it
+    def _fetched(self, cond: Column, *cols) -> DataFrame | None:
+        fa = self.store.load(self.spark, "fetched")
+        return None if fa is None else fa.where(cond).select(*cols)
+
     def order_df(self) -> DataFrame:
-        return self.store.load(self.spark, "order")
+        """Every scheduled URL: (epoch, wave_pos, url_norm, url_hash)."""
+        return self._fetched(
+            F.lit(True), F.col("fetch_epoch").alias("epoch"), "wave_pos",
+            "url_norm", "url_hash",
+        )
 
     def seen_df(self) -> DataFrame:
         return self.store.load(self.spark, "seen")
 
     def fetched_df(self) -> DataFrame:
-        """The crawl's OK-fetch output in its golden shape: the payload
-        table (written once per epoch by phase 1) joined to the narrow
-        ``shot`` side table on (url_hash, fetch_epoch) — unique per row, a
-        URL is in at most one wave per epoch."""
-        fa = self.store.load(self.spark, "fetched")
-        shot = self.store.load(self.spark, "shot")
-        if fa is None or shot is None:
-            return fa
-        return (
-            fa.where(F.col("status") == OK)
-            .join(shot, ["url_hash", "fetch_epoch"])
-            .select(
-                "url_hash", "image_id", "bytes", "w", "h", "fmt", "caption",
-                "phash", "fetch_epoch", "wave_pos", "status",
-                "prior_phash", "policy", "screenshot",
-            )
+        """The OK fetches, every ``fetched`` column (payload, screenshot
+        decision and prior phash included)."""
+        return self._fetched(F.col("status") == OK, "*")
+
+    def failed_df(self) -> DataFrame:
+        """The permanent failures: (url_hash, url_norm, status, epoch)."""
+        return self._fetched(
+            _perm_failed(), "url_hash", "url_norm", "status",
+            F.col("fetch_epoch").alias("epoch"),
         )
 
     def tls_df(self) -> DataFrame:

@@ -1,4 +1,5 @@
-"""Ad-hoc e2e check: Spark engine crawl order/seen-set == reference simulator."""
+"""Ad-hoc e2e check: Spark engine crawl order, seen set, fetched and failed
+rows == reference simulator. Exits 1 on the first mismatch."""
 import shutil
 import sys
 import tempfile
@@ -56,7 +57,6 @@ try:
 
     got_seen = {(r.url_hash, r.url_norm) for r in eng.seen_df().collect()}
     exp_seen = set(sres.seen.items())
-    exp_seen = {(h, u) for h, u in sres.seen.items()}
     if got_seen == exp_seen:
         print("SEEN MATCH ✓", len(got_seen))
     else:
@@ -67,7 +67,17 @@ try:
 
     got_f = {(r.url_hash, r.image_id, r.caption, r.phash) for r in eng.fetched_df().collect()}
     exp_f = {(d["url_hash"], d["image_id"], d["caption"], d["phash"]) for d in sres.fetched}
-    print("FETCHED MATCH ✓" if got_f == exp_f else f"FETCHED MISMATCH {len(got_f)} vs {len(exp_f)}")
+    if got_f != exp_f:
+        print("FETCHED MISMATCH", len(got_f), "vs", len(exp_f))
+        sys.exit(1)
+    print("FETCHED MATCH ✓", len(got_f))
+
+    got_x = {(r.url_hash, r.status, r.epoch) for r in eng.failed_df().collect()}
+    exp_x = {(d["url_hash"], d["status"], d["epoch"]) for d in sres.failed}
+    if got_x != exp_x:
+        print("FAILED MISMATCH", len(got_x), "vs", len(exp_x))
+        sys.exit(1)
+    print("FAILED MATCH ✓", len(got_x))
 finally:
     shutil.rmtree(tmp, ignore_errors=True)
     spark.stop()

@@ -61,7 +61,7 @@ def _rows(eng):
     )
     failed = sorted(
         (r.url_hash, r.status, r.epoch)
-        for r in eng.store.load(eng.spark, "failed").collect()
+        for r in eng.failed_df().collect()
     )
     return order, seen, fetched, failed
 

@@ -90,8 +90,7 @@ def test_fault_paths_exercised(engine_run, sim_result):
     and the engine agrees with the simulator row-for-row."""
     eng, _ = engine_run
     sres, _ = sim_result
-    got = {(r.url_hash, r.status) for r in
-           eng.store.load(eng.spark, "failed").collect()}
+    got = {(r.url_hash, r.status) for r in eng.failed_df().collect()}
     exp = {(d["url_hash"], d["status"]) for d in sres.failed}
     assert got == exp
     # the missing seeds really exercised 404: they must appear as failed-404
@@ -109,7 +108,8 @@ def test_denied_matches(engine_run, sim_result):
 
 
 def test_resume_exact(spark, tmp_root, world, sim_result, engine_run):
-    """Kill after 1 epoch → resume → identical order table (§5.2 item 4)."""
+    """Kill after 1 epoch → resume → identical order and failures (§5.2
+    item 4)."""
     sres, _ = sim_result
     store = SnapshotStore(f"{tmp_root}/state-resume")
     eng1 = CrawlEngine(spark, store, world, CFG)
@@ -120,6 +120,21 @@ def test_resume_exact(spark, tmp_root, world, sim_result, engine_run):
            for r in eng2.order_df().orderBy("epoch", "wave_pos").collect()]
     exp = [(d["epoch"], d["wave_pos"], d["url_hash"]) for d in sres.order]
     assert got == exp
+    got = {(r.url_hash, r.status, r.epoch) for r in eng2.failed_df().collect()}
+    exp = {(d["url_hash"], d["status"], d["epoch"]) for d in sres.failed}
+    assert got == exp
+
+
+def test_fetched_is_the_one_per_fetch_table(engine_run):
+    """``fetched`` holds one row per fetch; the order and the permanent
+    failures are views of it, not tables of their own."""
+    eng, stats = engine_run
+    # load() reads the last manifest: None = the manifest lists no such table
+    assert eng.store.load(eng.spark, "fetched") is not None
+    for table in ("order", "failed", "shot"):
+        assert eng.store.load(eng.spark, table) is None, table
+    assert eng.order_df().count() == stats.scheduled
+    assert eng.failed_df().count() == stats.failed
 
 
 def test_lineage_and_metrics_written(engine_run):
